@@ -131,9 +131,10 @@ object InterleavedGen {
   }
 }
 
-/** The Spark-side extraction pipeline: `mapPartitions` of the per-row
-  * engine over the interleaved table, with partition-level engine reuse,
-  * optional salting for balanced partitions, and per-partition metrics.
+/** The Spark-side extraction pipeline: the per-row engine as one
+  * codegen'd Catalyst expression ([[ExtractInterleaved]]) projected over
+  * the interleaved table, with per-thread engine reuse, optional salting
+  * for balanced partitions, and per-partition metrics.
   *
   * Scale notes (100 TB design): the engine is row-local, so the plan has
   * NO shuffle — extraction runs map-only over the scan's file-split tasks
@@ -174,21 +175,6 @@ object ExtractPipeline {
               policy: ExtractPolicy = ExtractPolicy.Default): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
     extractDF(ds.toDF(), policy).as[ExtractedDoc]
-  }
-
-  /** Typed mapPartitions path (custom policies; same engine). */
-  def extractTyped(ds: Dataset[InterleavedDoc], policy: ExtractPolicy): Dataset[ExtractedDoc] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val ex = new Extractor(policy) // reused across rows (arena analog)
-      it.map { doc =>
-        val res = ex.extract(doc.spans.view.map(s =>
-          InFrag(s.kind == "text", s.text, s.media_ref)))
-        ExtractedDoc(doc.doc_id,
-          res.spans.map(s => InSpan(s.kind, s.text, s.media_ref, s.offset)),
-          res.error)
-      }
-    }
   }
 
   /** Salted repartition for skewed inputs: distributes rows uniformly by

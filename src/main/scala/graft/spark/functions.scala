@@ -2,33 +2,81 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import graft.core.IntBuf
 import graft.extract.{ExtractPolicy, Extractor}
+
+/** One thread's extraction state for one policy: the engine plus the row
+  * scratch [[ExtractInterleaved]] reuses. Not thread-safe: obtained from
+  * the per-thread cache ([[ExtractInterleaved.workerFor]]) and only used
+  * by the thread that created it.
+  */
+private[spark] final class EngineWorker(policy: ExtractPolicy) {
+  private val owner = Thread.currentThread()
+  val engine = new Extractor(policy)
+  /** Text fragments of the current row, gathered by the single pass. */
+  var texts = new Array[UTF8String](64)
+  /** Media refs (copied out of the input row) and their html offsets;
+    * primitive offsets, since an ArrayBuffer[Int] would box each one.
+    */
+  val mediaRefs = new scala.collection.mutable.ArrayBuffer[UTF8String](4)
+  val mediaOffsets = new IntBuf(8)
+
+  def ownedByCurrentThread: Boolean = owner eq Thread.currentThread()
+}
+
+/** A per-row engine call as a codegen'd expression. Interpreted `eval` and
+  * the generated code run the same body, [[run]]; they differ only in how
+  * they find the thread's [[EngineWorker]]. `eval` looks it up per row
+  * (expression instances are shared by local-mode task threads). The
+  * generated class keeps it in a field, resolved on its first row and
+  * again only if another thread calls it, so the policy-keyed lookup runs
+  * once per partition. Being codegen'd (not `CodegenFallback`) lets
+  * `CollapseCodegenStages` fuse the scan, the extraction and its
+  * consumers into one stage, with no UnsafeRow copy of the input spans
+  * before the call or of the output spans after it.
+  */
+private[spark] trait EngineExpression extends UnaryExpression {
+  def policy: ExtractPolicy
+
+  /** The row body: `input` is the non-null child value. */
+  def run(input: Any, w: EngineWorker): Any
+
+  def worker(): EngineWorker = ExtractInterleaved.workerFor(policy)
+
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(input: Any): Any = run(input, worker())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj(prettyName, this)
+    val w = ctx.addMutableState(classOf[EngineWorker].getName, "worker")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""if ($w == null || !$w.ownedByCurrentThread()) $w = $self.worker();
+         |${ev.value} = (${CodeGenerator.javaType(dataType)}) $self.run($c, $w);""".stripMargin)
+  }
+}
 
 /** `extract_spans(html)` — the engine as a Catalyst expression, the SQL
   * analog of the reference's one-off `rewrite_str`
   * (/root/reference/src/rewriter/mod.rs:307-340). Returns the ordered
   * span array `array<struct<kind,text,media_ref,offset>>` for a whole
-  * HTML document string.
-  *
-  * CodegenFallback: the per-row engine is a black box to codegen; the
-  * expression still participates in column pruning / filter pushdown and
-  * keeps the surrounding plan whole-stage-compiled. Engine instances are
-  * thread-local (reused across rows within a task).
+  * HTML document string. Codegen'd through [[EngineExpression]], so it
+  * sits inside the surrounding whole-stage-codegen stage.
   */
-case class ExtractSpans(child: Expression)
-    extends UnaryExpression with CodegenFallback with Serializable {
+case class ExtractSpans(child: Expression) extends EngineExpression with Serializable {
 
+  override def policy: ExtractPolicy = ExtractPolicy.Default
   override def dataType: DataType = ExtractSpans.SpanArrayType
-  override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
+  override def run(input: Any, w: EngineWorker): Any = {
     val html = input.asInstanceOf[UTF8String].getBytes
-    val res = ExtractSpans.engine.get().extractHtml(html, Vector.empty, Vector.empty)
+    val res = w.engine.extractHtml(html, Vector.empty, Vector.empty)
     new GenericArrayData(res.spans.map { s =>
       InternalRow(UTF8String.fromString(s.kind), UTF8String.fromString(s.text),
         UTF8String.fromString(s.media_ref), s.offset)
@@ -49,9 +97,6 @@ object ExtractSpans {
     StructField("offset", IntegerType, nullable = false)))
   val SpanArrayType: DataType = ArrayType(SpanType, containsNull = false)
 
-  private[spark] val engine: ThreadLocal[Extractor] =
-    ThreadLocal.withInitial(() => new Extractor(ExtractPolicy.Default))
-
   /** Register `extract_spans` for SQL and the Column surface. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -68,16 +113,16 @@ object ExtractSpans {
   * document buffer), with NO Dataset encoder materialization on either
   * side. This is the hot path ExtractPipeline uses: at 10^12-row scale
   * the per-row object churn of a typed `Dataset[InterleavedDoc]` decode
-  * (tens of boxed objects + strings per document) would dominate GC;
-  * this expression keeps the scan -> extract -> project plan inside one
-  * whole-stage-codegen'd stage with a single CodegenFallback island.
+  * (tens of boxed objects + strings per document) would dominate GC.
+  * Codegen'd through [[EngineExpression]]: over a parquet table the
+  * scan, this expression, the projection of its fields and a partial
+  * aggregate above it run as one whole-stage-codegen stage.
   */
 case class ExtractInterleaved(child: Expression,
                               policy: ExtractPolicy = ExtractPolicy.Default)
-    extends UnaryExpression with CodegenFallback with Serializable {
+    extends EngineExpression with Serializable {
 
   override def dataType: DataType = ExtractInterleaved.ResultType
-  override def nullable: Boolean = true
 
   // field ordinals resolved BY NAME from the child's physical struct:
   // external parquet may order the span struct differently (e.g.
@@ -107,64 +152,71 @@ case class ExtractInterleaved(child: Expression,
     }
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  override def run(input: Any, w: EngineWorker): Any = {
+    val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
-    val scratch = ExtractInterleaved.scratch.get()
-    // pass 1: total html bytes
+    if (w.texts.length < n) w.texts = new Array[UTF8String](math.max(n, 2 * w.texts.length))
+    val texts = w.texts
+    val mediaRefs = w.mediaRefs
+    val mediaOffsets = w.mediaOffsets
+    mediaRefs.clear()
+    mediaOffsets.clear()
+    // one pass over the fragments: each kind and text is read once; text
+    // fragments are kept for the copy below, and a media fragment's
+    // offset is the text byte count so far. A null fragment is skipped.
+    var nTexts = 0
     var total = 0
     var i = 0
     while (i < n) {
-      val row = arr.getStruct(i, numFields)
-      if (ExtractInterleaved.isText(row.getUTF8String(kindOrd))) {
-        val t = row.getUTF8String(textOrd)
-        if (t != null) total += t.numBytes()
+      val frag = arr.getStruct(i, numFields)
+      if (frag != null) {
+        val kind = frag.getUTF8String(kindOrd)
+        if (kind != null && kind.equals(ExtractInterleaved.TEXT)) {
+          val t = frag.getUTF8String(textOrd)
+          if (t != null) {
+            texts(nTexts) = t
+            nTexts += 1
+            total += t.numBytes()
+          }
+        } else {
+          // copied: the input row's memory may be reused for the next row
+          val r = frag.getUTF8String(refOrd)
+          mediaRefs += (if (r == null) UTF8String.EMPTY_UTF8 else r.clone())
+          mediaOffsets += total
+        }
       }
       i += 1
     }
     // fresh per-row buffer: A/B-measured FASTER than a reused grow-only
     // buffer (short-lived TLAB arrays die in young GC for ~free, while
-    // reuse pays ThreadLocal + old-gen write traffic); media offset/ref
-    // scratch is reused only to avoid Integer boxing
+    // reuse pays old-gen write traffic)
     val html = new Array[Byte](total)
-    val mediaRefs = scratch.mediaRefs
-    val mediaOffsets = scratch.mediaOffsets
-    mediaRefs.clear()
-    mediaOffsets.clear()
     var off = 0
     i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, numFields)
-      if (ExtractInterleaved.isText(row.getUTF8String(kindOrd))) {
-        val t = row.getUTF8String(textOrd)
-        if (t != null) {
-          t.writeToMemory(html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + off)
-          off += t.numBytes()
-        }
-      } else {
-        val r = row.getUTF8String(refOrd)
-        mediaRefs += (if (r == null) "" else r.toString)
-        mediaOffsets += off
-      }
+    while (i < nTexts) {
+      val t = texts(i)
+      texts(i) = null // the worker must not pin input memory past this row
+      t.writeToMemory(html, Platform.BYTE_ARRAY_OFFSET + off)
+      off += t.numBytes()
       i += 1
     }
-    val res = ExtractInterleaved.engineFor(policy).extractRaw(html, total, mediaOffsets)
+    val res = w.engine.extractRaw(html, total, mediaOffsets)
     // zero-copy text spans: UTF8Strings view the per-doc html buffer
     val out = new Array[Any](res.count)
     i = 0
     while (i < res.count) {
-      out(i) =
+      val start = res.starts(i)
+      out(i) = new GenericInternalRow(
         if (res.kinds(i) == 0)
-          InternalRow(ExtractInterleaved.TEXT,
-            UTF8String.fromBytes(html, res.starts(i), res.ends(i) - res.starts(i)),
-            UTF8String.EMPTY_UTF8, res.starts(i))
+          Array[Any](ExtractInterleaved.TEXT,
+            UTF8String.fromBytes(html, start, res.ends(i) - start), UTF8String.EMPTY_UTF8, start)
         else
-          InternalRow(ExtractInterleaved.MEDIA, UTF8String.EMPTY_UTF8,
-            UTF8String.fromString(mediaRefs(res.mediaIdx(i))), res.starts(i))
+          Array[Any](ExtractInterleaved.MEDIA, UTF8String.EMPTY_UTF8,
+            mediaRefs(res.mediaIdx(i)), start))
       i += 1
     }
-    InternalRow(new GenericArrayData(out),
-      if (res.error == null) null else UTF8String.fromString(res.error))
+    new GenericInternalRow(Array[Any](new GenericArrayData(out),
+      if (res.error == null) null else UTF8String.fromString(res.error)))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -178,33 +230,20 @@ object ExtractInterleaved {
     StructField("spans", ExtractSpans.SpanArrayType, nullable = false),
     StructField("error", StringType, nullable = true)))
 
-  // per-thread engine cache keyed by policy (expression instances can be
+  // per-thread worker cache keyed by policy (expression instances can be
   // shared across local-mode task threads)
-  private val engines: ThreadLocal[java.util.HashMap[ExtractPolicy, Extractor]] =
-    ThreadLocal.withInitial(() => new java.util.HashMap[ExtractPolicy, Extractor]())
+  private val workers: ThreadLocal[java.util.HashMap[ExtractPolicy, EngineWorker]] =
+    ThreadLocal.withInitial(() => new java.util.HashMap[ExtractPolicy, EngineWorker]())
 
-  /** Per-thread media scratch for [[ExtractInterleaved.nullSafeEval]]:
-    * primitive offsets (an ArrayBuffer[Int] would box every element).
-    * Row/array/buffer objects stay fresh per row on purpose — pooling
-    * them A/B-measured slower than young-gen allocation.
-    */
-  private[spark] final class Scratch {
-    val mediaRefs = new scala.collection.mutable.ArrayBuffer[String](4)
-    val mediaOffsets = new graft.core.IntBuf(8)
-  }
-  private[spark] val scratch: ThreadLocal[Scratch] =
-    ThreadLocal.withInitial(() => new Scratch)
-  private[spark] def engineFor(policy: ExtractPolicy): Extractor = {
-    val m = engines.get()
-    var e = m.get(policy)
-    if (e == null) { e = new Extractor(policy); m.put(policy, e) }
-    e
+  private[spark] def workerFor(policy: ExtractPolicy): EngineWorker = {
+    val m = workers.get()
+    var w = m.get(policy)
+    if (w == null) { w = new EngineWorker(policy); m.put(policy, w) }
+    w
   }
 
   private[spark] val TEXT = UTF8String.fromString("text")
   private[spark] val MEDIA = UTF8String.fromString("media")
-  @inline private[spark] def isText(kind: UTF8String): Boolean =
-    kind != null && kind.equals(TEXT)
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

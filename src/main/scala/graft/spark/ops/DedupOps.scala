@@ -712,13 +712,17 @@ object DedupOps {
     spanDedupApplyFrom(base, stagedSpanGrams(base.sparkSession, dir, k), k)
 
   /** Exact n-gram Jaccard similarity join via shingle inverted index.
-    * Plan shape (one scan of the corpus, two shuffles): explode distinct
-    * shingles -> group by shingle into doc-id buckets -> expand each
-    * bucket's ordered pairs in place (bounded by `dfCap`) -> count
-    * co-occurrences per pair -> join per-doc set sizes (computed as a
-    * column expression, no second explode) -> Jaccard filter.
-    * Avoids the naive self-join, which would recompute and shuffle the
-    * exploded table twice. Returns (id_a, id_b, jaccard).
+    * Plan shape: the inverted index (shingle hash -> sorted doc ids) is
+    * read from the session postings memo ([[postingsOf]], a row-format
+    * localCheckpoint, so a `Scan ExistingRDD` leaf) -> buckets over
+    * `dfCap` dropped (observed) -> each bucket's ordered pairs expanded in
+    * place -> co-occurrences counted per pair -> joined to per-doc set
+    * sizes, read from the persisted shingle view as a column expression
+    * -> Jaccard filter. The explode + group-by that builds the index
+    * runs once per session, when the memo is built, not in this plan
+    * (PlanSpec pins no Generate node). Avoids the naive self-join, which
+    * would recompute and shuffle the exploded table twice. Returns
+    * (id_a, id_b, jaccard).
     */
   def ngramJaccardPairs(base: DataFrame, threshold: Double,
                         dfCap: Int = DefaultShingleDfCap): DataFrame = {

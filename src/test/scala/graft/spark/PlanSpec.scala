@@ -1,6 +1,13 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{ColumnarToRowExec, GenerateExec, InputAdapter,
+  ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -28,6 +35,43 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def planOf(name: String): String =
     graft.SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** Every physical node of `p`, through adaptive plans, query stages,
+    * in-memory relations and subqueries.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case other => other.children
+    }
+    p +: (kids ++ p.subqueries).flatMap(nodes)
+  }
+
+  /** The nodes one whole-stage-codegen stage fuses: its subtree down to,
+    * not through, its InputAdapter boundaries.
+    */
+  private def fused(w: WholeStageCodegenExec): Seq[SparkPlan] = {
+    def go(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(go)
+    }
+    go(w.child)
+  }
+
+  /** The codegen stage fusing the projection that holds `holds`; fails
+    * when some such projection is not inside a codegen stage.
+    */
+  private def stageOfProject(plan: SparkPlan)(holds: Expression => Boolean): Seq[SparkPlan] = {
+    val all = nodes(plan)
+    val projects = all.collect { case p: ProjectExec if p.projectList.exists(_.exists(holds)) => p }
+    assert(projects.nonEmpty, plan.toString)
+    val stages = all.collect { case w: WholeStageCodegenExec => fused(w) }
+    projects.foreach(p => assert(stages.exists(_.exists(_ eq p)),
+      s"not in a whole-stage-codegen stage: ${p.simpleString(200)}\n$plan"))
+    stages.find(_.exists(projects.contains)).get
+  }
+
   private def formatted(name: String): String = {
     val df = graft.SparkEntry.queries(name)(spark, sf)
     df.queryExecution.explainString(
@@ -37,6 +81,40 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("extraction (x1) is map-only up to the projection: no Exchange") {
     val p = planOf("x1_extract_text")
     assert(!p.contains("Exchange"), p)
+  }
+
+  test("extract_interleaved over parquet fuses scan, extraction and partial aggregate") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_x").toString
+    InterleavedGen.table(spark, sf).toDF().write.mode("overwrite").parquet(dir)
+    val df = ExtractPipeline.extractDF(spark.read.parquet(dir))
+      .agg(count(lit(1)), sum(size(col("spans"))), count(col("error")))
+    assert(df.collect().head.getLong(0) == 500) // finalizes the adaptive plan
+    val plan = df.queryExecution.executedPlan
+    val stage = stageOfProject(plan)(_.isInstanceOf[ExtractInterleaved])
+    // one codegen id from the columnar scan's row conversion to the
+    // map-side aggregate: no UnsafeRow copy of the spans in between
+    assert(stage.exists(_.isInstanceOf[ColumnarToRowExec]), plan.toString)
+    assert(stage.exists {
+      case h: HashAggregateExec => h.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }, plan.toString)
+  }
+
+  test("extract_spans over parquet runs inside a whole-stage-codegen stage") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_s").toString
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), concat(lit("<article><p>"), col("text"), lit("</p></article>")).as("html"))
+      .write.mode("overwrite").parquet(dir)
+    ExtractSpans.register(spark)
+    val df = spark.read.parquet(dir)
+      .select(ExtractSpans.extract_spans(col("html")).as("spans"))
+      .agg(sum(size(col("spans"))))
+    assert(df.collect().head.getLong(0) >= 500) // finalizes the adaptive plan
+    val plan = df.queryExecution.executedPlan
+    val stage = stageOfProject(plan)(_.isInstanceOf[ExtractSpans])
+    assert(stage.exists(_.isInstanceOf[ColumnarToRowExec]), plan.toString)
   }
 
   test("documents scan prunes columns for t1 (only doc_id + text read)") {
@@ -102,14 +180,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the inline exchange was both slower at median and the source of
     // transient GC-burst spikes — see AbD2Postings)
     assert(p.contains("Scan ExistingRDD"), p)
-    assert(!p.contains("explode"), p)
+    assert(!nodes(df.queryExecution.executedPlan).exists(_.isInstanceOf[GenerateExec]), p)
     // the exchange-payload optimization (shuffle keys on the 64-bit
     // shingle hash, not the trigram string) lives in the postings
     // lineage — assert it on the inline form, which shares rawPostings
-    val pInline = graft.spark.ops.DedupOps
+    val inline = graft.spark.ops.DedupOps
       .ngramJaccardPairsInlineAb(graft.spark.ops.DedupOps.withVariants(spark, sf), 0.6)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+    val pInline = inline.toString
     assert(pInline.contains("xxhash64"), pInline)
+    // and the inline form is where the explode (a Generate node) lives
+    assert(nodes(inline).exists(_.isInstanceOf[GenerateExec]), pInline)
   }
 
   test("bucketed tables co-locate the fact join: no shuffle on the join keys") {
