@@ -960,28 +960,16 @@ final class Rewriter(
           val c0 = cls.charAt(0).toInt
           val last = e - len
           var p = s0
-          if (Rewriter.ClsProbeMemchr) {
-            while (p <= last) {
-              p = graft.core.Lexer.memchrRange(in, c0, p, last + 1)
-              if (p < 0) return false
-              if (p == s0 || isWsB(in(p - 1))) {
-                var k = 1
-                var ok = true
-                while (ok && k < len) { if ((in(p + k) & 0xff) != cls.charAt(k)) ok = false; k += 1 }
-                if (ok && (p + len == e || isWsB(in(p + len)))) return true
-              }
-              p += 1
+          while (p <= last) {
+            p = graft.core.Lexer.memchrRange(in, c0, p, last + 1)
+            if (p < 0) return false
+            if (p == s0 || isWsB(in(p - 1))) {
+              var k = 1
+              var ok = true
+              while (ok && k < len) { if ((in(p + k) & 0xff) != cls.charAt(k)) ok = false; k += 1 }
+              if (ok && (p + len == e || isWsB(in(p + len)))) return true
             }
-          } else {
-            while (p <= last) {
-              if ((in(p) & 0xff) == c0 && (p == s0 || isWsB(in(p - 1)))) {
-                var k = 1
-                var ok = true
-                while (ok && k < len) { if ((in(p + k) & 0xff) != cls.charAt(k)) ok = false; k += 1 }
-                if (ok && (p + len == e || isWsB(in(p + len)))) return true
-              }
-              p += 1
-            }
+            p += 1
           }
           return false
         }
@@ -1380,14 +1368,6 @@ object Rewriter {
     */
   private[rewrite] final val WsMask: Long =
     (1L << '\t') | (1L << '\n') | (1L << '\f') | (1L << '\r') | (1L << ' ')
-
-  /** A/B switch for the class-token candidate scan (SWAR memchr vs plain
-    * first-byte loop); toggled by the AbClsRatio harness so both
-    * variants run interleaved in one JVM. -Dgraft.clsProbe=loop selects
-    * the byte loop.
-    */
-  private[graft] var ClsProbeMemchr: Boolean =
-    !"loop".equals(System.getProperty("graft.clsProbe"))
 
   /** HTML-compatible encode (reference D13 output behavior —
     * encoding_rs's `encode_from_utf8` in

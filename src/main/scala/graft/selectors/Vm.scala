@@ -729,14 +729,6 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     } else if (top >= 0) fDesc(top)
     else null
 
-  /** True if the innermost open element's descriptor requests content
-    * removal (used by the dispatcher's `should_stop_removing` check).
-    */
-  def currentRemovesContent: Boolean = {
-    val d = currentDescriptor
-    d != null && d.removeContent
-  }
-
   /** Attach a descriptor to the frame pushed by the latest start tag. */
   def setCurrentDescriptor(d: ElementDescriptor): Unit =
     if (frameless) {
@@ -1010,48 +1002,6 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
       j += 1
     }
     top = idx - 1
-  }
-
-  /** Open count for a tag name (diagnostics; the string's byte FNV is
-    * computed here the same way the lexer folds it).
-    */
-  def depthAt(name: String): Int = {
-    val h = TagHash.of(name)
-    if (frameless) {
-      // count live entries in the name's stack
-      if (h != TagHash.Empty) {
-        val i = flSlotOf(h)
-        if (flKeys(i) != h) return 0
-        val dep = flDepthsT(i); val seq = flSeqsT(i)
-        var n = 0
-        var j = 0
-        while (j < dep.length) { if (entryLive(dep(j), seq(j))) n += 1; j += 1 }
-        return n
-      }
-      val f = fnvOfName(name)
-      val i = fuSlotOf(f)
-      if (fuKeys(i) != f) return 0
-      val dep = fuDepthsT(i); val seq = fuSeqsT(i)
-      var n = 0
-      var j = 0
-      while (j < dep.length) { if (entryLive(dep(j), seq(j))) n += 1; j += 1 }
-      return n
-    }
-    if (h != TagHash.Empty) oncGet(h)
-    else fnvGet(fnvOfName(name))
-  }
-
-  private def fnvOfName(name: String): Long = {
-    var f = 0xcbf29ce484222325L
-    val bytes = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      val c = if (b >= 'A' && b <= 'Z') b + 32 else b
-      f = (f ^ c) * 0x100000001b3L
-      i += 1
-    }
-    normFnv(f)
   }
 }
 

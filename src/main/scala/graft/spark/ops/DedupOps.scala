@@ -198,61 +198,43 @@ object DedupOps {
         .BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
   }
 
-  /** The shingled corpus (doc_id, text, sh), persisted and memoized by the
-    * base plan's semantic hash: MinHash verification and the inverted
+  // ---- session memos (see SessionMemo for keys, bound and release) ----
+  // Clear cascade: shingles -> grams, postings, pairs, embedding pairs;
+  // pairs -> star CC, label-propagation CC.
+  private val ccMemo = SessionMemo.frames()
+  private val lpCcMemo = SessionMemo.frames()
+  private val pairsMemo = SessionMemo.frames(ccMemo, lpCcMemo)
+  private val gramMemo = SessionMemo.frames()
+  private val postingsMemo = SessionMemo.frames()
+  private val embPairsMemo = SessionMemo.frames()
+  private val shingleMemo =
+    SessionMemo.frames(gramMemo, postingsMemo, pairsMemo, embPairsMemo)
+
+  /** Clears every text-derived memo (shingles and everything built on them). */
+  def clearShingleCache(): Unit = shingleMemo.clear()
+  def clearPostingsCache(): Unit = postingsMemo.clear()
+  /** Clears the pair lists and both cluster-id memos built on them. */
+  def clearPairsCache(): Unit = pairsMemo.clear()
+  def clearEmbPairsCache(): Unit = embPairsMemo.clear()
+  def clearCcCache(): Unit = ccMemo.clear()
+  def clearLpCcCache(): Unit = lpCcMemo.clear()
+
+  /** The shingled corpus (doc_id, text, sh), persisted (MEMORY_AND_DISK)
+    * and memoized by the base plan: MinHash verification and the inverted
     * index each consume it from several subtrees, and an unpersisted
     * DataFrame subtree recomputes its whole lineage (scan + split +
-    * shingle) once per consumer. At 100 TB this is a staging table write;
-    * locally MEMORY_AND_DISK, bounded to the most recent few plans (older
-    * entries are unpersisted on eviction). Caveat: memoization keys on
-    * the PLAN, not the data — if the underlying files are overwritten
-    * in-place within one session, call [[clearShingleCache]] first.
+    * shingle) once per consumer. At 100 TB this is a staging table write
+    * ([[stageShingles]]).
     */
-  private val MaxCachedShingleViews = 4
-  private val shingleCache =
-    new java.util.LinkedHashMap[(SparkSession, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedShingleViews
-        // unpersist may throw if the entry's session has since been stopped;
-        // never let a dead cache entry fail a live session's shingled() call
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  private def shingled(base: DataFrame): DataFrame = shingleCache.synchronized {
-    // drop entries whose session is gone so they don't pin stopped
-    // sessions/plans until LRU eviction reaches them
-    shingleCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash())
-    val cached = shingleCache.get(key)
-    if (cached != null) cached
-    else {
+  private def shingled(base: DataFrame): DataFrame =
+    shingleMemo.getOrBuild(base.sparkSession, base.queryExecution.analyzed.semanticHash()) {
       val spark = base.sparkSession
       import spark.implicits._
-      val df = base.select(col("doc_id"), col("text")).as[(Long, String)]
+      base.select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions(_.map { case (id, t) => (id, t, shingleSet(t)) })
         .toDF("doc_id", "text", "sh")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      shingleCache.put(key, df)
-      df
     }
-  }
-
-  def clearShingleCache(): Unit = {
-    shingleCache.synchronized {
-      shingleCache.values.forEach(df => scala.util.Try(df.unpersist()))
-      shingleCache.clear()
-    }
-    // stale shingles imply stale pairs and stale grams: anyone
-    // invalidating the text-derived views (files overwritten in place)
-    // must not keep any derived table
-    clearPairsCache()
-    clearGramCache()
-    clearEmbPairsCache()
-    clearPostingsCache()
-  }
 
   // ---- shingle staging table (resumable; the 100 TB path) ----------------
 
@@ -492,47 +474,23 @@ object DedupOps {
 
   /** The corpus positional-gram table (doc_id, pos, g) with grams
     * exchanged as xxhash64 keys — one row-local scan, no HOFs. Memoized
-    * per session like [[shingled]]/the pairs memo: d12, d13 and p2 each
-    * consume the SAME gram table (at 100 TB it is staged once via
-    * [[stageSpanGrams]]; in-session the memo cuts two redundant
-    * tokenize+hash scans). Invalidated by [[clearShingleCache]] (grams
-    * are text-derived state, same staleness rules).
+    * per session: d12, d13 and p2 each consume the SAME gram table (at
+    * 100 TB it is staged once via [[stageSpanGrams]]; in-session the memo
+    * cuts two redundant tokenize+hash scans). Grams are text-derived, so
+    * [[clearShingleCache]] clears them too.
     */
-  private def posGrams(base: DataFrame, k: Int): DataFrame = gramCache.synchronized {
-    gramCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(), k)
-    val cached = gramCache.get(key)
-    if (cached != null) cached
-    else {
+  private def posGrams(base: DataFrame, k: Int): DataFrame =
+    gramMemo.getOrBuild(base.sparkSession, (base.queryExecution.analyzed.semanticHash(), k)) {
       val spark = base.sparkSession
       import spark.implicits._
-      val df = base.select(col("doc_id"), col("text")).as[(Long, String)]
+      base.select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, t) =>
           posGramsOf(t, k).map { case (i, g) => (id, i, g) }
         })
         .toDF("doc_id", "pos", "gram")
         .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      gramCache.put(key, df)
-      df
     }
-  }
-
-  private val MaxCachedGramViews = 4
-  private val gramCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedGramViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  private[graft] def clearGramCache(): Unit = gramCache.synchronized {
-    gramCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    gramCache.clear()
-  }
 
   def spanDedup(base: DataFrame, k: Int = 13): DataFrame =
     spanDedupFrom(base, posGrams(base, k), k)
@@ -731,10 +689,10 @@ object DedupOps {
     // original columnar persist() memo, reading the array-valued
     // postings back out of cached column batches cost MORE than
     // recomputing (steady ran slower than cold) and inline won; against
-    // the final localCheckpoint memo the interleaved same-JVM A/B
-    // (graft.AbD2Postings) reads memo ~1.35 s vs inline ~1.65 s median
-    // AND the inline path's transient 4-5 s GC-burst spikes (the
-    // explode+groupBy exchange) disappear entirely.
+    // the final localCheckpoint memo an interleaved same-JVM A/B read
+    // memo ~1.35 s vs inline ~1.65 s median AND the inline path's
+    // transient 4-5 s GC-burst spikes (the explode+groupBy exchange)
+    // disappeared entirely.
     val withSh = shingled(base).select(col("doc_id"), col("sh"))
     ngramJaccardPairsCore(withSh, postingsOf(withSh), threshold, dfCap)
   }
@@ -745,34 +703,14 @@ object DedupOps {
     * explode + groupBy exchange over every shingle occurrence. The
     * production analog is [[stageShingles]]: postings are derived once
     * per corpus and every consumer reads them. Keyed on the shingled
-    * view's plan hash; persisted; cleared via [[clearShingleCache]].
-    * The `*Staged` paths BYPASS this memo on purpose — a re-staged
-    * directory must be re-read (the staging specs re-stage in-session).
-    * Consumers apply their own df-cap filters and `observe` metrics over
-    * the (vocabulary-sized) memoized table, so every op's observed
-    * metrics still fire on every execution.
+    * view's plan. The `*Staged` paths BYPASS this memo on purpose — a
+    * re-staged directory must be re-read (the staging specs re-stage
+    * in-session). Consumers apply their own df-cap filters and `observe`
+    * metrics over the (vocabulary-sized) memoized table, so every op's
+    * observed metrics still fire on every execution.
     */
-  private val postingsCache =
-    new java.util.LinkedHashMap[(SparkSession, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedShingleViews
-        if (evict) scala.util.Try(releaseRound(e.getValue))
-        evict
-      }
-    }
-
-  def clearPostingsCache(): Unit = postingsCache.synchronized {
-    postingsCache.values.forEach(df => scala.util.Try(releaseRound(df)))
-    postingsCache.clear()
-  }
-
-  private def postingsOf(withSh: DataFrame): DataFrame = postingsCache.synchronized {
-    postingsCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (withSh.sparkSession, withSh.queryExecution.analyzed.semanticHash())
-    val cached = postingsCache.get(key)
-    if (cached != null) cached
-    else {
+  private def postingsOf(withSh: DataFrame): DataFrame =
+    postingsMemo.getOrBuild(withSh.sparkSession, withSh.queryExecution.analyzed.semanticHash()) {
       // materialized as a LAZY localCheckpoint rather than persist()
       // (round 7): persist registers the plan fragment with the
       // CacheManager, which then silently substituted the COLUMNAR
@@ -781,15 +719,12 @@ object DedupOps {
       // cached column batches made their pair expansion ~2x slower
       // than recomputing. A checkpoint is a LogicalRDD (row format,
       // never pattern-matched into other plans): row reads are fast
-      // enough that d2/d2b now feed from here too (AbD2Postings
-      // evidence at [[ngramJaccardPairs]]). Storage released via
-      // releaseRound on eviction/clear (Dataset.unpersist does not
-      // release a localCheckpoint).
-      val df = rawPostings(withSh).localCheckpoint(false)
-      postingsCache.put(key, df)
-      df
+      // enough that d2/d2b now feed from here too (A/B evidence at
+      // [[ngramJaccardPairs]]). Its blocks live while any DataFrame
+      // references the RDD (a held d2 result included); eviction only
+      // drops it from the memo.
+      rawPostings(withSh).localCheckpoint(false)
     }
-  }
 
   /** The inverted index itself: every bucket kept (consumers filter),
     * members sorted for deterministic in-row pair expansion. The
@@ -850,25 +785,6 @@ object DedupOps {
       .select(col("n_shingles"), col("max_df"), col("n_singleton"),
         col("n_pairable"), col("n_capped"),
         expr("pw2 div 2").as("pair_work"))
-  }
-
-  /** ROUND-7 A/B ONLY (not a declared query path): d2 fed from INLINE
-    * postings — the pre-switch form, kept so [[graft.AbD2Postings]] can
-    * re-run the inline-vs-memo comparison that justified feeding the
-    * declared d2/d2b from the localCheckpoint postings memo.
-    */
-  def ngramJaccardPairsInlineAb(base: DataFrame, threshold: Double,
-                                dfCap: Int = DefaultShingleDfCap): DataFrame = {
-    val withSh = shingled(base).select(col("doc_id"), col("sh"))
-    ngramJaccardPairsCore(withSh, rawPostings(withSh), threshold, dfCap)
-  }
-
-  /** ROUND-7 A/B ONLY: d2b fed from inline postings (see above). */
-  def ngramJaccardPairsCappedInlineAb(base: DataFrame, threshold: Double,
-                                      memberCap: Int = DefaultPairMemberCap,
-                                      dfCap: Int = DefaultShingleDfCap): DataFrame = {
-    val withSh = shingled(base).select(col("doc_id"), col("sh"))
-    ngramJaccardPairsCappedCore(withSh, rawPostings(withSh), threshold, memberCap, dfCap)
   }
 
   /** d2 over a pre-staged shingle table (see [[stageShingles]]): the
@@ -1111,59 +1027,24 @@ object DedupOps {
     * the observed metric `dropped_band_buckets` (0 means the result is
     * exact); pass `bucketCap = Int.MaxValue` to restore exact recall at
     * the cost of O(n^2) expansion inside giant buckets.
+    *
+    * Memoized per session on (base plan, threshold, bucketCap) and
+    * persisted: d6, d8, d9, d10 and p1 each consume the SAME pair list —
+    * at 100 TB it is computed once and every dedup-apply / clustering
+    * consumer reads it. The `dropped_band_buckets` observed metric fires
+    * on the FIRST materialization only (cache reads do not re-run the
+    * banding stage).
     */
   def minhashLshPairs(base: DataFrame, threshold: Double,
-                      bucketCap: Int = DefaultLshBucketCap): DataFrame = pairsCache.synchronized {
-    pairsCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      threshold, bucketCap)
-    val cached = pairsCache.get(key)
-    if (cached != null) cached
-    else {
+                      bucketCap: Int = DefaultLshBucketCap): DataFrame =
+    pairsMemo.getOrBuild(base.sparkSession,
+        (base.queryExecution.analyzed.semanticHash(), threshold, bucketCap)) {
       // the shingled() memo already avoids re-shingling; this one avoids
       // re-running signatures + banding + verification per consumer
-      val df = minhashLshPairsFromShingled(
+      minhashLshPairsFromShingled(
         shingled(base).select(col("doc_id"), col("sh")), threshold, bucketCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairsCache.put(key, df)
-      df
     }
-  }
-
-  /** Session-scoped near-dup pair memo (the e3-codebook / shingled()
-    * pattern): d6, d8, d9, d10 and p1 each consume the SAME
-    * (base, threshold, cap) pair list — at 100 TB the pair list is
-    * computed once and every dedup-apply / clustering consumer reads it;
-    * locally the memo cuts four redundant signature+banding+verify
-    * passes from the iterative bench tail. Keyed on the base plan's
-    * ANALYZED semantic hash + (threshold, bucketCap); bounded LRU, the
-    * persisted result is unpersisted on eviction. Caveat (same as
-    * [[shingled]]): keys on the PLAN, not the data — if the underlying
-    * files are overwritten in place within one session, call
-    * [[clearPairsCache]] first. The `dropped_band_buckets` observed
-    * metric fires on the FIRST materialization only (cache reads do not
-    * re-run the banding stage).
-    */
-  private val MaxCachedPairViews = 4
-  private val pairsCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Double, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Double, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedPairViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  def clearPairsCache(): Unit = {
-    pairsCache.synchronized {
-      pairsCache.values.forEach(df => scala.util.Try(df.unpersist()))
-      pairsCache.clear()
-    }
-    // stale pairs imply stale cluster assignments
-    clearCcCache()
-    clearLpCcCache()
-  }
 
   /** d3 over a pre-staged shingle table (see [[stageShingles]]). */
   def minhashLshPairsStaged(spark: SparkSession, dir: String, threshold: Double,
@@ -1239,25 +1120,6 @@ object DedupOps {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Connected-component cluster ids over a near-dup pair list: every
-    * document gets the MIN doc_id of its duplicate component (the
-    * scale-correct dedup-apply primitive — dropping `id_b` of each pair,
-    * as d6 does, over-deletes on chains A~B~C). Iterative min-label
-    * propagation; each round is one shuffle join; convergence is an exact
-    * count of labels that changed this round (robust to negative doc_ids
-    * and to Long-overflow aliasing that a label-sum test would miss;
-    * O(component diameter) rounds; near-dup components are shallow — for
-    * web-graph-diameter inputs use [[clusterIdsStar]]).
-    * Returns (doc_id, cluster_id), persisted (MEMORY_AND_DISK) — callers
-    * that are done with the result should `.unpersist()` it.
-    *
-    * Each round's labels are materialized with lineage truncation
-    * (localCheckpoint): the round references the previous labels twice,
-    * so carrying the logical plan across rounds would double it per
-    * round — persist caches DATA but Catalyst still walks (and logs) the
-    * full accumulated plan, which is exponential in rounds and falls
-    * over around depth ~30 even though every round's data is tiny.
-    */
   /** Release the storage behind a round materialized with
     * `localCheckpoint(true)` — the checkpointed RDD's blocks otherwise
     * live until the driver GCs the dereferenced Dataset, so an iterative
@@ -1271,38 +1133,33 @@ object DedupOps {
       case _ => ()
     }
 
-  /** Session memo for [[clusterIds]] — the label-propagation sibling of
-    * the star-CC memo (round 7), kept as a SEPARATE cache so the two
-    * algorithms never serve each other's results (their outputs are
-    * equal at fixpoint, but each is benchmarked and spec'd as itself).
+  /** Connected-component cluster ids over a near-dup pair list: every
+    * document gets the MIN doc_id of its duplicate component (the
+    * scale-correct dedup-apply primitive — dropping `id_b` of each pair,
+    * as d6 does, over-deletes on chains A~B~C). Iterative min-label
+    * propagation; each round is one shuffle join; convergence is an exact
+    * count of labels that changed this round (robust to negative doc_ids
+    * and to Long-overflow aliasing that a label-sum test would miss;
+    * O(component diameter) rounds; near-dup components are shallow — for
+    * web-graph-diameter inputs use [[clusterIdsStar]]).
+    * Returns (doc_id, cluster_id), persisted (MEMORY_AND_DISK); the memo
+    * owns the result. Memoized per session on (base plan, pairs plan),
+    * in a memo of its own so the label-propagation and star algorithms
+    * never serve each other's results (equal at fixpoint, but each is
+    * benchmarked and spec'd as itself).
+    *
+    * Each round's labels are materialized with lineage truncation
+    * (localCheckpoint): the round references the previous labels twice,
+    * so carrying the logical plan across rounds would double it per
+    * round — persist caches DATA but Catalyst still walks (and logs) the
+    * full accumulated plan, which is exponential in rounds and falls
+    * over around depth ~30 even though every round's data is tiny.
     */
-  private val lpCcCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedCcViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
+  def clusterIds(base: DataFrame, pairs: DataFrame): DataFrame =
+    lpCcMemo.getOrBuild(base.sparkSession, (base.queryExecution.analyzed.semanticHash(),
+        pairs.queryExecution.analyzed.semanticHash())) {
+      clusterIdsUncached(base, pairs)
     }
-
-  def clearLpCcCache(): Unit = lpCcCache.synchronized {
-    lpCcCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    lpCcCache.clear()
-  }
-
-  def clusterIds(base: DataFrame, pairs: DataFrame): DataFrame = lpCcCache.synchronized {
-    lpCcCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      pairs.queryExecution.analyzed.semanticHash())
-    val cached = lpCcCache.get(key)
-    if (cached != null) cached
-    else {
-      val df = clusterIdsUncached(base, pairs)
-      lpCcCache.put(key, df)
-      df
-    }
-  }
 
   private def clusterIdsUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1329,20 +1186,27 @@ object DedupOps {
       converged = changed == 0L
     }
     sym.unpersist()
-    // re-persist the 2-column projection so the caller gets a directly
-    // releasable result
+    // the final round stays: it is the lineage the persisted result
+    // recomputes from once the memo unpersists it
     val out = labels.select(col("doc_id"), col("cluster_id")).persist(lvl)
     out.count()
-    releaseRound(labels)
     out
   }
+
+  /** Rounds the last [[clusterIdsStar]] call took to converge (test
+    * evidence for the O(log n) bound; not thread-safe, diagnostics only).
+    */
+  private[graft] var lastStarRounds = 0
 
   /** Connected components in O(log n) rounds regardless of component
     * diameter: alternating large-star/small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", 2014) — the scale
     * path [[clusterIds]]'s doc points at for deep graphs. Same contract:
-    * (doc_id, cluster_id = component min), persisted; callers release
-    * with `.unpersist()`.
+    * (doc_id, cluster_id = component min), persisted; the memo owns the
+    * result. Memoized per session on (base plan, pairs plan): d9, d10
+    * and p1 all run the IDENTICAL clusterIdsStar(withVariants, pairs)
+    * computation — at 100 TB the cluster-assignment table is computed
+    * once per corpus and every apply/curate/audit consumer reads it.
     *
     * Scale notes: both star operations are expressed as join + min-agg —
     * no collect_set, so a giant star never materializes one row with a
@@ -1357,50 +1221,11 @@ object DedupOps {
     * cluster with executor churn, set a checkpoint dir and swap in
     * `checkpoint()` for fault-tolerant truncation.
     */
-  /** Rounds the last [[clusterIdsStar]] call took to converge (test
-    * evidence for the O(log n) bound; not thread-safe, diagnostics only).
-    */
-  private[graft] var lastStarRounds = 0
-
-  /** Session-scoped star-CC memo (round 7; the judge-mandated
-    * [[minhashLshPairs]] pattern extended to its main consumer): d9, d10
-    * and p1 all run the IDENTICAL clusterIdsStar(withVariants, pairs)
-    * computation — at 100 TB the cluster-assignment table is computed
-    * once per corpus and every apply/curate/audit consumer reads it.
-    * Keyed on (session, base plan hash, pairs plan hash); bounded LRU;
-    * evicted entries are unpersisted. Cascades from [[clearPairsCache]]
-    * (stale pairs imply stale clusters). Caveat (same as the pairs memo):
-    * keys on the PLAN, not the data — overwriting files in place within
-    * a session requires [[clearShingleCache]] first.
-    */
-  private val MaxCachedCcViews = 4
-  private val ccCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedCcViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
+  def clusterIdsStar(base: DataFrame, pairs: DataFrame): DataFrame =
+    ccMemo.getOrBuild(base.sparkSession, (base.queryExecution.analyzed.semanticHash(),
+        pairs.queryExecution.analyzed.semanticHash())) {
+      clusterIdsStarUncached(base, pairs)
     }
-
-  def clearCcCache(): Unit = ccCache.synchronized {
-    ccCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    ccCache.clear()
-  }
-
-  def clusterIdsStar(base: DataFrame, pairs: DataFrame): DataFrame = ccCache.synchronized {
-    ccCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      pairs.queryExecution.analyzed.semanticHash())
-    val cached = ccCache.get(key)
-    if (cached != null) cached
-    else {
-      val df = clusterIdsStarUncached(base, pairs)
-      ccCache.put(key, df)
-      df
-    }
-  }
 
   private def clusterIdsStarUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1466,7 +1291,8 @@ object DedupOps {
         coalesce(col("root"), col("doc_id")).as("cluster_id"))
       .persist(lvl)
     labels.count()
-    releaseRound(edges)
+    // the final edge list stays: it is the lineage the persisted labels
+    // recompute from once the memo unpersists them
     labels
   }
 
@@ -1507,44 +1333,6 @@ object DedupOps {
     code
   }
 
-  /** Embedding-cosine near-dup pairs: sign-projection blocking (one
-    * 24-bit code per vector -> bucket) -> in-row ordered pair expansion
-    * (the inverted-index shape, no all-pairs join) -> exact cosine verify
-    * in double precision (sequential fold, DuckDB-bit-compatible).
-    * Blocking recall is exactly 1.0 for same-direction duplicates; for
-    * fuzzy angular thresholds use multi-table probing as in
-    * [[SimOps.annTopK]]. Returns (id_a, id_b, cos >= threshold).
-    *
-    * `bucketCap` bounds the in-row pair expansion: a web-scale corpus has
-    * million-member duplicate clusters (and degenerate all-zero vectors
-    * share code 0), whose O(n^2) pair lists are useless — dedup-apply
-    * wants cluster representatives, not every edge. Oversized buckets are
-    * dropped and surfaced via the observed metric "dropped_buckets".
-    */
-  /** Session-scoped memo for [[embCosineDupPairs]] (round 7): e4 and p3
-    * both consume the embedding pair list, and — unlike the relational
-    * pair plans — an embCosine plan contains typed-closure nodes whose
-    * semantic hash is NOT stable across invocations, so the downstream
-    * CC memo could never hit through a fresh pairs plan. Keyed on the
-    * BASE plan's hash + (threshold, bucketCap), exactly like
-    * [[minhashLshPairs]]; returning the SAME DataFrame object also makes
-    * the consumer-side plan hashes stable.
-    */
-  private val embPairsCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Double, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Double, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedPairViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  def clearEmbPairsCache(): Unit = embPairsCache.synchronized {
-    embPairsCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    embPairsCache.clear()
-  }
-
   /** Sequential three-accumulator cosine in double precision — the SAME
     * operation order as [[SimOps.cosine]]'s per-accumulator folds
     * (acc + x(i).toDouble * y(i).toDouble, ascending i), so the result
@@ -1566,20 +1354,34 @@ object DedupOps {
     ab / (math.sqrt(aa) * math.sqrt(bb))
   }
 
+  /** Embedding-cosine near-dup pairs: sign-projection blocking (one
+    * 24-bit code per vector -> bucket) -> in-row ordered pair expansion
+    * (the inverted-index shape, no all-pairs join) -> exact cosine verify
+    * in double precision (sequential fold, DuckDB-bit-compatible).
+    * Blocking recall is exactly 1.0 for same-direction duplicates; for
+    * fuzzy angular thresholds use multi-table probing as in
+    * [[SimOps.annTopK]]. Returns (id_a, id_b, cos >= threshold).
+    *
+    * `bucketCap` bounds the in-row pair expansion: a web-scale corpus has
+    * million-member duplicate clusters (and degenerate all-zero vectors
+    * share code 0), whose O(n^2) pair lists are useless — dedup-apply
+    * wants cluster representatives, not every edge. Oversized buckets are
+    * dropped and surfaced via the observed metric "dropped_buckets".
+    *
+    * Memoized per session on (base plan, threshold, bucketCap) and
+    * persisted (round 7): e4 and p3 both consume the pair list, and an
+    * embCosine plan contains typed-closure nodes whose semantic hash is
+    * NOT stable across invocations, so the downstream CC memo could never
+    * hit through a fresh pairs plan; returning the SAME DataFrame object
+    * makes the consumer-side plan hashes stable.
+    */
   def embCosineDupPairs(base: DataFrame, threshold: Double,
-                        bucketCap: Int = 2000): DataFrame = embPairsCache.synchronized {
-    embPairsCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      threshold, bucketCap)
-    val cached = embPairsCache.get(key)
-    if (cached != null) cached
-    else {
-      val df = embCosineDupPairsUncached(base, threshold, bucketCap)
+                        bucketCap: Int = 2000): DataFrame =
+    embPairsMemo.getOrBuild(base.sparkSession,
+        (base.queryExecution.analyzed.semanticHash(), threshold, bucketCap)) {
+      embCosineDupPairsUncached(base, threshold, bucketCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      embPairsCache.put(key, df)
-      df
     }
-  }
 
   private def embCosineDupPairsUncached(base: DataFrame, threshold: Double,
                                         bucketCap: Int): DataFrame = {

@@ -368,25 +368,26 @@ object SimOps {
       ivfTopK(emb, queryIds, k, cents, nprobe), k, minRecall)
   }
 
-  // Session-scoped codebook memo: at real scale the coarse quantizer is
-  // trained ONCE and reused across every query/batch — retraining the
-  // single-threaded driver k-means per invocation made e3 the
-  // second-most driver-contention-sensitive query in the round-4 bench
-  // (14.4 s contended vs 1.4 s quiet). Keyed on the embedding table's
-  // ANALYZED plan semantic hash + (k, sampleN): same source => same
-  // deterministic sample => same codebook.
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Array[Array[Float]]]()
+  // Session-scoped codebook memo (see SessionMemo): at real scale the
+  // coarse quantizer is trained ONCE and reused across every query/batch
+  // — retraining the single-threaded driver k-means per invocation made
+  // e3 the second-most driver-contention-sensitive query in the round-4
+  // bench (14.4 s contended vs 1.4 s quiet). Keyed on the embedding
+  // table's plan + (k, sampleN): same source => same deterministic
+  // sample => same codebook. A codebook holds no Spark storage, so
+  // release is a no-op.
+  private val codebookMemo = new SessionMemo[Array[Array[Float]]](_ => ())
 
-  /** [[trainIvfCentroids]] with a per-JVM memo (see cache note above). */
+  /** [[trainIvfCentroids]] with a session memo (see the note above). */
   def trainIvfCentroidsCached(emb: DataFrame, k: Int, iters: Int = 8,
-                              sampleN: Int = 2048): Array[Array[Float]] = {
-    val key = (emb.queryExecution.analyzed.semanticHash(), k, sampleN)
-    codebookCache.computeIfAbsent(key, _ => trainIvfCentroids(emb, k, iters, sampleN))
-  }
+                              sampleN: Int = 2048): Array[Array[Float]] =
+    codebookMemo.getOrBuild(emb.sparkSession,
+        (emb.queryExecution.analyzed.semanticHash(), k, sampleN)) {
+      trainIvfCentroids(emb, k, iters, sampleN)
+    }
 
-  /** Test hook: drop memoized codebooks. */
-  def clearCodebookCache(): Unit = codebookCache.clear()
+  /** Drops memoized codebooks. */
+  def clearCodebookCache(): Unit = codebookMemo.clear()
 
   /** One-row ANN quality gate: recall of [[annTopK]] against
     * [[bruteForceTopK]] on the same queries. Deterministic (both sides

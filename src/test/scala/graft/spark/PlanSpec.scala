@@ -178,18 +178,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // localCheckpoint LogicalRDD), so d2's own plan carries NO
     // explode+groupBy over shingle occurrences per execution (round 7:
     // the inline exchange was both slower at median and the source of
-    // transient GC-burst spikes — see AbD2Postings)
+    // transient GC-burst spikes)
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!nodes(df.queryExecution.executedPlan).exists(_.isInstanceOf[GenerateExec]), p)
     // the exchange-payload optimization (shuffle keys on the 64-bit
     // shingle hash, not the trigram string) lives in the postings
-    // lineage — assert it on the inline form, which shares rawPostings
-    val inline = graft.spark.ops.DedupOps
-      .ngramJaccardPairsInlineAb(graft.spark.ops.DedupOps.withVariants(spark, sf), 0.6)
+    // lineage — assert it on the staged form, which builds its postings
+    // inline from the same rawPostings
+    val dir = java.nio.file.Files.createTempDirectory("graft_d2_plan").toString
+    graft.spark.ops.DedupOps.stageShingles(
+      graft.spark.ops.DedupOps.withVariants(spark, sf), dir, buckets = 2)
+    val inline = graft.spark.ops.DedupOps.ngramJaccardPairsStaged(spark, dir, 0.6)
       .queryExecution.executedPlan
     val pInline = inline.toString
     assert(pInline.contains("xxhash64"), pInline)
-    // and the inline form is where the explode (a Generate node) lives
+    // and the inline postings are where the explode (a Generate node) lives
     assert(nodes(inline).exists(_.isInstanceOf[GenerateExec]), pInline)
   }
 
