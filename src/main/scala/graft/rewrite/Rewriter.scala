@@ -847,7 +847,6 @@ final class Rewriter(
       if (epoch == Int.MaxValue) { // stamp wrap: clear once per 2^31 tags
         java.util.Arrays.fill(nameStamp, 0)
         java.util.Arrays.fill(valueStamp, 0)
-        bloomEpoch = -1
         epoch = 1
       }
     }
@@ -880,34 +879,6 @@ final class Rewriter(
     // byte-level probe: unmatched attributes never materialize a name
     override def attrNameEq(i: Int, lowerName: String): Boolean =
       HtmlUtil.eqIgnoreCase(in, attrsV.nameStart(i), attrsV.nameEnd(i), lowerName)
-
-    // per-tag attr-name first-letter mask (see ElemView.attrNameBloom):
-    // built lazily on the FIRST attr predicate of a tag, shared by every
-    // predicate on that tag — a clear bit answers `.class`/`#id`/`[attr]`
-    // in one AND instead of an attr-list scan. One byte load + OR per
-    // attribute; bit mapping matches ElemView.attrNameBit (letters →
-    // c-'a', anything else — incl. non-ASCII bytes — → bit 26, which is
-    // conservative because non-ASCII selector names never filter).
-    private var bloomV = 0L
-    private var bloomEpoch = -1
-    override def attrNameBloom: Long = {
-      if (bloomEpoch != epoch) {
-        var m = 0L
-        var i = 0
-        while (i < matCount) {
-          val ns = attrsV.nameStart(i)
-          if (ns < attrsV.nameEnd(i)) {
-            val b = in(ns) & 0xff
-            val c = if (b >= 'A' && b <= 'Z') b + 32 else b
-            m |= (if (c >= 'a' && c <= 'z') 1L << (c - 'a') else 1L << 26)
-          } else m |= 1L << 26
-          i += 1
-        }
-        bloomV = m
-        bloomEpoch = epoch
-      }
-      bloomV
-    }
 
     // byte-level .class / #id evaluation: the attribute VALUE string is
     // never materialized for the (overwhelmingly common) ASCII selector

@@ -200,10 +200,9 @@ object DedupOps {
 
   // ---- session memos (see SessionMemo for keys, bound and release) ----
   // Clear cascade: shingles -> grams, postings, pairs, embedding pairs;
-  // pairs -> star CC, label-propagation CC.
+  // pairs -> cluster ids.
   private val ccMemo = SessionMemo.frames()
-  private val lpCcMemo = SessionMemo.frames()
-  private val pairsMemo = SessionMemo.frames(ccMemo, lpCcMemo)
+  private val pairsMemo = SessionMemo.frames(ccMemo)
   private val gramMemo = SessionMemo.frames()
   private val postingsMemo = SessionMemo.frames()
   private val embPairsMemo = SessionMemo.frames()
@@ -213,11 +212,10 @@ object DedupOps {
   /** Clears every text-derived memo (shingles and everything built on them). */
   def clearShingleCache(): Unit = shingleMemo.clear()
   def clearPostingsCache(): Unit = postingsMemo.clear()
-  /** Clears the pair lists and both cluster-id memos built on them. */
+  /** Clears the pair lists and the cluster-id memo built on them. */
   def clearPairsCache(): Unit = pairsMemo.clear()
   def clearEmbPairsCache(): Unit = embPairsMemo.clear()
   def clearCcCache(): Unit = ccMemo.clear()
-  def clearLpCcCache(): Unit = lpCcMemo.clear()
 
   /** The shingled corpus (doc_id, text, sh), persisted (MEMORY_AND_DISK)
     * and memoized by the base plan: MinHash verification and the inverted
@@ -1133,80 +1131,23 @@ object DedupOps {
       case _ => ()
     }
 
-  /** Connected-component cluster ids over a near-dup pair list: every
-    * document gets the MIN doc_id of its duplicate component (the
-    * scale-correct dedup-apply primitive — dropping `id_b` of each pair,
-    * as d6 does, over-deletes on chains A~B~C). Iterative min-label
-    * propagation; each round is one shuffle join; convergence is an exact
-    * count of labels that changed this round (robust to negative doc_ids
-    * and to Long-overflow aliasing that a label-sum test would miss;
-    * O(component diameter) rounds; near-dup components are shallow — for
-    * web-graph-diameter inputs use [[clusterIdsStar]]).
-    * Returns (doc_id, cluster_id), persisted (MEMORY_AND_DISK); the memo
-    * owns the result. Memoized per session on (base plan, pairs plan),
-    * in a memo of its own so the label-propagation and star algorithms
-    * never serve each other's results (equal at fixpoint, but each is
-    * benchmarked and spec'd as itself).
-    *
-    * Each round's labels are materialized with lineage truncation
-    * (localCheckpoint): the round references the previous labels twice,
-    * so carrying the logical plan across rounds would double it per
-    * round — persist caches DATA but Catalyst still walks (and logs) the
-    * full accumulated plan, which is exponential in rounds and falls
-    * over around depth ~30 even though every round's data is tiny.
-    */
-  def clusterIds(base: DataFrame, pairs: DataFrame): DataFrame =
-    lpCcMemo.getOrBuild(base.sparkSession, (base.queryExecution.analyzed.semanticHash(),
-        pairs.queryExecution.analyzed.semanticHash())) {
-      clusterIdsUncached(base, pairs)
-    }
-
-  private def clusterIdsUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val nodes = base.select(col("doc_id")).distinct()
-    val edges = pairs.select(col("id_a"), col("id_b"))
-    val sym = edges.unionAll(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .persist(lvl)
-    var labels = nodes.withColumn("cluster_id", col("doc_id")).localCheckpoint(true)
-    var converged = labels.isEmpty // empty corpus: nothing to propagate
-    while (!converged) {
-      val viaNeighbors = sym
-        .join(labels.select(col("doc_id").as("id_b"), col("cluster_id").as("nlabel")), "id_b")
-        .groupBy(col("id_a").as("doc_id")).agg(min(col("nlabel")).as("nlabel"))
-      // keep the previous label alongside so the fixpoint test is an exact
-      // changed-row count over this round's (materialized) result — one
-      // cheap job against the checkpoint, no extra shuffle
-      val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id").as("prev_label"),
-          least(col("cluster_id"), coalesce(col("nlabel"), col("cluster_id"))).as("cluster_id"))
-        .localCheckpoint(true)
-      val changed = next.where(col("cluster_id") =!= col("prev_label")).count()
-      releaseRound(labels) // next is materialized; the old round is dead
-      labels = next
-      converged = changed == 0L
-    }
-    sym.unpersist()
-    // the final round stays: it is the lineage the persisted result
-    // recomputes from once the memo unpersists it
-    val out = labels.select(col("doc_id"), col("cluster_id")).persist(lvl)
-    out.count()
-    out
-  }
-
   /** Rounds the last [[clusterIdsStar]] call took to converge (test
     * evidence for the O(log n) bound; not thread-safe, diagnostics only).
     */
   private[graft] var lastStarRounds = 0
 
-  /** Connected components in O(log n) rounds regardless of component
-    * diameter: alternating large-star/small-star (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", 2014) — the scale
-    * path [[clusterIds]]'s doc points at for deep graphs. Same contract:
-    * (doc_id, cluster_id = component min), persisted; the memo owns the
-    * result. Memoized per session on (base plan, pairs plan): d9, d10
-    * and p1 all run the IDENTICAL clusterIdsStar(withVariants, pairs)
-    * computation — at 100 TB the cluster-assignment table is computed
-    * once per corpus and every apply/curate/audit consumer reads it.
+  /** Connected-component cluster ids over a near-dup pair list: every
+    * document gets the MIN doc_id of its duplicate component (the
+    * scale-correct dedup-apply primitive — dropping `id_b` of each pair,
+    * as d6 does, over-deletes on chains A~B~C). O(log n) rounds
+    * regardless of component diameter: alternating large-star/small-star
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * 2014). Returns (doc_id, cluster_id), persisted (MEMORY_AND_DISK);
+    * the memo owns the result. Memoized per session on (base plan, pairs
+    * plan): d8, d9, d10 and p1 all run the IDENTICAL
+    * clusterIdsStar(withVariants, pairs) computation — at 100 TB the
+    * cluster-assignment table is computed once per corpus and every
+    * apply/curate/audit consumer reads it.
     *
     * Scale notes: both star operations are expressed as join + min-agg —
     * no collect_set, so a giant star never materializes one row with a

@@ -1,0 +1,44 @@
+package graft.repo
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Keeps settled experiments out of the tree: a `graft.*` JVM property in
+  * library code is an A/B switch whose question a measurement should
+  * answer and then delete, and a `main` in a test file that is not a
+  * Spec is a probe harness nothing runs or checks. Paths resolve against
+  * the working directory, which sbt sets to the project base directory
+  * for forked tests.
+  */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  private def scalaFiles(dir: String): Seq[Path] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"$dir not found under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+    finally walk.close()
+  }
+
+  private def read(p: Path): String = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+
+  test("src/main/scala reads no graft.* system property") {
+    val switch = """(System\.getProperty|sys\.props(\.get)?)\(\s*"graft\.""".r
+    val hits = for {
+      f <- scalaFiles("src/main/scala")
+      (line, i) <- read(f).linesIterator.zipWithIndex
+      if switch.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    if (hits.nonEmpty) fail(hits.mkString("A/B switches left in library code:\n", "\n", ""))
+  }
+
+  test("only *Spec.scala files under src/test/scala declare a main") {
+    val main = """\bdef\s+main\s*\(""".r
+    val hits = scalaFiles("src/test/scala")
+      .filterNot(_.getFileName.toString.endsWith("Spec.scala"))
+      .filter(f => main.findFirstIn(read(f)).isDefined)
+    if (hits.nonEmpty) fail(hits.mkString("probe mains outside a Spec:\n", "\n", ""))
+  }
+}

@@ -103,11 +103,6 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually {
     heldSurvivesEviction(i => DedupOps.clusterIdsStar(nodes, pairs.where(col("id_a") =!= i)))
   }
 
-  test("a held clusterIds result stays readable after its memo entry is evicted") {
-    val (nodes, pairs) = graph
-    heldSurvivesEviction(i => DedupOps.clusterIds(nodes, pairs.where(col("id_a") =!= i)))
-  }
-
   test("a held result stays readable after a clear") {
     DedupOps.clearShingleCache()
     val (nodes, pairs) = graph

@@ -13,7 +13,7 @@ import graft.spark.ops.{DedupOps, Par, SimOps}
   *    to the column form (same IEEE operation order).
   *  - Par.spreadBy: raises a below-parallelism scan to the cluster
   *    floor, and is an exact no-op (same object) at/above it.
-  *  - session memos (star CC, label-propagation CC, embedding pairs):
+  *  - session memos (star CC, embedding pairs):
   *    semantically identical inputs share ONE computation; the clear
   *    hooks cascade so stale derived views can never be served.
   */
@@ -81,15 +81,9 @@ class Round7OptSpec extends AnyFunSuite with BeforeAndAfterAll {
     // second call with a SEMANTICALLY identical (freshly built) input
     // returns the SAME materialized result — no second iteration runs
     assert(DedupOps.clusterIdsStar(base, pairs) eq first)
-    val lp = DedupOps.clusterIds(base, pairs)
-    assert(DedupOps.clusterIds(base, pairs) eq lp)
-    // the two algorithms agree but never share a cache entry
-    assert(!(lp eq first))
-    assert(lp.orderBy("doc_id").collect().map(_.getLong(1)).toSeq ==
-      first.orderBy("doc_id").collect().map(_.getLong(1)).toSeq)
     assert(first.orderBy("doc_id").collect().map(_.getLong(1)).toSeq ==
       Seq(1L, 1L, 1L, 4L))
-    // clearPairsCache cascades to BOTH CC memos (stale pairs => stale labels)
+    // clearPairsCache cascades to the CC memo (stale pairs => stale labels)
     DedupOps.clearPairsCache()
     val recomputed = DedupOps.clusterIdsStar(base, pairs)
     assert(!(recomputed eq first))

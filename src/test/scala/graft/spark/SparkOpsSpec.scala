@@ -150,6 +150,10 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "memoized pairs must be persisted")
     val p3 = DedupOps.minhashLshPairs(DedupOps.withVariants(spark, sf), 0.7)
     assert(!(p1 eq p3), "a different threshold is a different pair list")
+    // d8 and d9 are one cluster table over that pair list, built once
+    assert(graft.SparkEntry.queries("d8_dedup_clusters")(spark, sf) eq
+      graft.SparkEntry.queries("d9_cc_star")(spark, sf),
+      "d8 and d9 must share the memoized cluster table")
     // shingle invalidation cascades: the memo must not survive a clear
     DedupOps.clearShingleCache()
     assert(p1.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
@@ -1561,7 +1565,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("large-star/small-star components == label propagation on adversarial graphs") {
+  test("large-star/small-star components == union-find component minimum on adversarial graphs") {
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.col
@@ -1575,17 +1579,26 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(200L, 201L, 300L, 301L, 302L, 400L, 401L) // 400/401 isolated
     val base = nodes.toDF("doc_id")
     val pairs = pairsSeq.toDF("id_a", "id_b")
+    // reference: union-find over pairsSeq, the smaller root always wins,
+    // so every root is its component's minimum
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = parent.get(x) match {
+      case Some(p) if p != x => val r = find(p); parent(x) = r; r
+      case _ => x
+    }
+    for ((u, v) <- pairsSeq) {
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
     val viaStar = DedupOps.clusterIdsStar(base, pairs)
-    val viaProp = DedupOps.clusterIds(base, pairs)
     val a = viaStar.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val b = viaProp.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(a.toSeq == b.toSeq)
+    assert(a.toSeq == nodes.sorted.map(n => (n, find(n))))
     // chain collapses to min 0, star to 100, isolated nodes label self
     val m = a.toMap
     assert((0L until 60L).forall(m(_) == 0L))
     assert((100L to 130L).forall(m(_) == 100L))
     assert(m(302L) == 300L && m(400L) == 400L)
-    viaStar.unpersist(); viaProp.unpersist()
+    viaStar.unpersist()
     // empty pair list: every node labels itself
     val none = DedupOps.clusterIdsStar(base, Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
     assert(none.where(col("doc_id") =!= col("cluster_id")).count() == 0)
