@@ -6,7 +6,7 @@ import graft.spark._
 /** spark-submit entry point for the extraction job:
   *
   *   spark-submit --class graft.ExtractJob <jar> \
-  *     <input-table-path> <output-path> [buckets]
+  *     <input-table-path> <output-path> [buckets] [maxBucketsPerPass]
   *
   * Input: parquet/Iceberg-style table with
   * (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
@@ -14,7 +14,8 @@ import graft.spark._
   * bucketed run with a per-bucket lineage/metrics ledger — re-submitting
   * after a failure resumes mid-table. On a cluster, size `buckets` to a
   * few times the executor count; each bucket is an independently
-  * committed slice.
+  * committed slice. `maxBucketsPerPass` (default: all pending buckets in
+  * one pass) bounds the work a kill mid-pass loses.
   */
 object ExtractJob {
   def main(args: Array[String]): Unit = {

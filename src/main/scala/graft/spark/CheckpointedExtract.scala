@@ -1,47 +1,32 @@
 package graft.spark
 
-import org.apache.spark.sql.{Dataset, SaveMode}
-import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 import graft.extract.ExtractPolicy
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
 /** Resumable, bucketed extraction run with a per-partition lineage +
-  * metrics ledger (the north rule's mid-table resume requirement).
+  * metrics ledger (the north rule's mid-table resume requirement), on the
+  * [[BucketLedger]] protocol: all not-yet-done buckets are extracted in
+  * ONE scan of the input and committed to the ledger only after the write
+  * succeeds, so a killed job resumes mid-table with no duplicate or lost
+  * documents, and the input is never re-read once per bucket (at 100 TB x
+  * 1,000 buckets a per-bucket filter loop would read 100 PB). At real
+  * scale the same pattern runs per Iceberg partition/file-group; buckets
+  * here stand in for file-scan task groups.
   *
-  * The input is split into `buckets` disjoint slices by doc_id hash. All
-  * not-yet-done buckets are extracted in ONE scan of the input (a single
-  * job writing `partitionBy("bucket")` with dynamic partition overwrite),
-  * and a ledger line per bucket is committed via atomic rename only after
-  * that job succeeds — a killed job resumes mid-table with no duplicate or
-  * lost documents, and the input is never re-read once per bucket (at
-  * 100 TB x 1,000 buckets the old per-bucket filter loop would have read
-  * 100 PB). `maxBucketsPerPass` bounds the work lost to a mid-pass kill:
-  * scans = ceil(todo / maxBucketsPerPass), a knob between one-scan
-  * throughput and per-bucket commit granularity. At real scale the same
-  * pattern runs per Iceberg partition/file-group; buckets here stand in
-  * for file-scan task groups.
-  *
-  * Per-bucket metrics come from an accumulator tallied inside the write
-  * job's result stage (exactly-once per successful task — no read-back of
-  * the written parquet). `bytes` counts UTF-8 octets of extracted text.
-  *
-  * Ledger format (JSON-per-line): a header line
-  *   {"header":1,"buckets":N,"policy":"<id>"}
-  * written on first run and validated on resume (a resume with a different
-  * bucket count or extraction policy would silently mix two disjoint
-  * partitionings — fail fast instead), then one line per completed bucket:
+  * Ledger header `{"header":1,"buckets":N,"policy":"<id>"}`: a resume with
+  * a different bucket count or extraction policy fails fast. Bucket lines
   *   {"bucket":i,"docs":n,"text_spans":n,"media_spans":n,"errors":n,
   *    "bytes":n,"wall_ms":n}
-  * (`wall_ms` is the wall time of the pass that committed the bucket.)
+  * carry the per-bucket metrics, tallied while the rows stream to the
+  * writer. `bytes` counts UTF-8 octets of extracted text; `wall_ms` is the
+  * wall time of the pass that committed the bucket.
   */
 object CheckpointedExtract {
 
   final case class BucketResult(bucket: Int, docs: Long, textSpans: Long,
                                 mediaSpans: Long, errors: Long, bytes: Long, wallMs: Long)
-
-  private def ledgerPath(outDir: String) = Paths.get(outDir, "_ledger.jsonl")
 
   /** Policy identity for the ledger header: a 64-bit FNV-1a digest of an
     * explicit canonical serialization of every policy field. Unlike the
@@ -65,133 +50,33 @@ object CheckpointedExtract {
     f"$h%016x"
   }
 
-  def doneBuckets(outDir: String): Set[Int] = {
-    val p = ledgerPath(outDir)
-    if (!Files.exists(p)) Set.empty
-    else {
-      val rx = """"bucket"\s*:\s*(\d+)""".r
-      Files.readAllLines(p, StandardCharsets.UTF_8).toArray(Array.empty[String])
-        .flatMap(l => rx.findFirstMatchIn(l).map(_.group(1).toInt)).toSet
-    }
-  }
-
-  /** (buckets, policyId) from the ledger header, if a ledger exists. */
-  private def readHeader(outDir: String): Option[(Int, String)] = {
-    val p = ledgerPath(outDir)
-    if (!Files.exists(p)) None
-    else {
-      val rx = """"header"\s*:\s*1\s*,\s*"buckets"\s*:\s*(\d+)\s*,\s*"policy"\s*:\s*"([^"]*)"""".r
-      Files.readAllLines(p, StandardCharsets.UTF_8).toArray(Array.empty[String])
-        .iterator.flatMap(l => rx.findFirstMatchIn(l).map(m => (m.group(1).toInt, m.group(2))))
-        .nextOption()
-    }
-  }
-
-  // atomic commit: copy-on-write + rename (one rename per pass)
-  private def appendLedger(outDir: String, lines: Seq[String]): Unit = {
-    if (lines.isEmpty) return
-    val p = ledgerPath(outDir)
-    val tmp = Paths.get(outDir, s"_ledger.tmp")
-    val prev = if (Files.exists(p))
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8) else ""
-    Files.write(tmp, (prev + lines.mkString("", "\n", "\n")).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** Run (or resume) an extraction over `docs` into `outDir`. Returns the
     * per-bucket results of THIS invocation (already-done buckets are
-    * skipped). Fails fast if `buckets`/`policy` differ from the original
-    * run recorded in the ledger header.
+    * skipped). Fails fast if `buckets` is not positive, if `outDir` holds
+    * a ledger of another kind of run, or if `buckets`/`policy` differ from
+    * the original run recorded in the ledger header.
     */
   def run(docs: Dataset[InterleavedDoc], outDir: String, buckets: Int,
           policy: ExtractPolicy = ExtractPolicy.Default,
           maxBucketsPerPass: Int = Int.MaxValue): Seq[BucketResult] = {
-    Files.createDirectories(Paths.get(outDir))
-    val pid = policyId(policy)
-    readHeader(outDir) match {
-      case Some((b, p)) =>
-        require(b == buckets,
-          s"resume with buckets=$buckets, but the ledger was written with buckets=$b")
-        require(p == pid,
-          s"resume with a different extraction policy (ledger $p, requested $pid)")
-      case None =>
-        // a headerless ledger that already has bucket lines predates the
-        // header format — stamping the CURRENT parameters would legitimize
-        // a mismatched resume, the exact bug the header prevents
-        require(doneBuckets(outDir).isEmpty,
-          s"ledger at $outDir has completed buckets but no header " +
-            "(pre-header format); re-run from scratch or add the header manually")
-        appendLedger(outDir, Seq(s"""{"header":1,"buckets":$buckets,"policy":"$pid"}"""))
-    }
-    val done = doneBuckets(outDir)
-    val todo = (0 until buckets).filterNot(done)
     val spark = docs.sparkSession
     import spark.implicits._
-    val results = scala.collection.mutable.ArrayBuffer[BucketResult]()
-
-    for (group <- todo.grouped(math.max(1, maxBucketsPerPass))) {
-      val t0 = System.nanoTime()
-      // one scan for the whole group: bucket column + isin filter, then the
-      // columnar extraction expression, partitioned write by bucket
-      val acc = new CollectionAccumulator[(Int, Array[Long])]()
-      spark.sparkContext.register(acc, s"graft_ckpt_metrics")
-      val extracted = ExtractPipeline.extractDF(
-        docs.toDF().withColumn("bucket", pmod(hash(col("doc_id")), lit(buckets)))
-          .where(col("bucket").isInCollection(group)),
-        policy)
-      // tally per-bucket metrics while streaming rows to the writer; the
-      // accumulator lives in the result stage, so updates are applied
-      // exactly once per successfully committed task
-      val tallied = extracted
+    BucketLedger.run(outDir, Seq("buckets" -> buckets, "policy" -> policyId(policy)),
+        docs.toDF(), maxBucketsPerPass,
+        Seq("docs", "text_spans", "media_spans", "errors", "bytes"), timed = true) { (slice, tally) =>
+      ExtractPipeline.extractDF(slice, policy)
         .select(col("doc_id"), col("spans"), col("error"), col("bucket"))
         .as[(String, Seq[InSpan], String, Int)]
-        .mapPartitions { it =>
-          val m = new java.util.HashMap[Int, Array[Long]]()
-          var flushed = false
-          new Iterator[(String, Seq[InSpan], String, Int)] {
-            def hasNext: Boolean = {
-              val h = it.hasNext
-              if (!h && !flushed) {
-                flushed = true
-                m.forEach((b, v) => acc.add((b, v)))
-              }
-              h
-            }
-            def next(): (String, Seq[InSpan], String, Int) = {
-              val r = it.next()
-              val v = m.computeIfAbsent(r._4, _ => new Array[Long](5))
-              v(0) += 1 // docs
-              r._2.foreach { s =>
-                if (s.kind == "text") { v(1) += 1; v(4) += ExtractPipeline.utf8Bytes(s.text) }
-                else v(2) += 1
-              }
-              if (r._3 != null) v(3) += 1
-              r
-            }
+        .mapPartitions(it => tally(it)(_._4) { (r, v) =>
+          v(0) += 1
+          r._2.foreach { s =>
+            if (s.kind == "text") { v(1) += 1; v(4) += ExtractPipeline.utf8Bytes(s.text) }
+            else v(2) += 1
           }
-        }
-      tallied.toDF("doc_id", "spans", "error", "bucket")
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(outDir)
-
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      val merged = new java.util.HashMap[Int, Array[Long]]()
-      acc.value.forEach { case (b, v) =>
-        val t = merged.computeIfAbsent(b, _ => new Array[Long](5))
-        var i = 0; while (i < 5) { t(i) += v(i); i += 1 }
-      }
-      val groupResults = group.map { b =>
-        val v = Option(merged.get(b)).getOrElse(new Array[Long](5))
-        BucketResult(b, v(0), v(1), v(2), v(3), v(4), wallMs)
-      }
-      appendLedger(outDir, groupResults.map(r =>
-        s"""{"bucket":${r.bucket},"docs":${r.docs},"text_spans":${r.textSpans},""" +
-          s""""media_spans":${r.mediaSpans},"errors":${r.errors},"bytes":${r.bytes},"wall_ms":${r.wallMs}}"""))
-      results ++= groupResults
-    }
-    results.toSeq
+          if (r._3 != null) v(3) += 1
+        })
+        .toDF("doc_id", "spans", "error", "bucket")
+    }.map(c => BucketResult(c.bucket, c.counts(0), c.counts(1), c.counts(2), c.counts(3),
+      c.counts(4), c.wallMs))
   }
 }

@@ -2,6 +2,7 @@ package graft.spark.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.spark.BucketLedger
 
 /** Deduplication operators for the training-data pipeline: exact
   * (hash-groupBy), word-shingle Jaccard similarity join, MinHash+LSH
@@ -215,7 +216,6 @@ object DedupOps {
   /** Clears the pair lists and the cluster-id memo built on them. */
   def clearPairsCache(): Unit = pairsMemo.clear()
   def clearEmbPairsCache(): Unit = embPairsMemo.clear()
-  def clearCcCache(): Unit = ccMemo.clear()
 
   /** The shingled corpus (doc_id, text, sh), persisted (MEMORY_AND_DISK)
     * and memoized by the base plan: MinHash verification and the inverted
@@ -236,8 +236,8 @@ object DedupOps {
 
   // ---- shingle staging table (resumable; the 100 TB path) ----------------
 
-  /** Stage the shingled corpus to a parquet staging table with a
-    * CheckpointedExtract-style ledger, so a killed shingling job resumes
+  /** Stage the shingled corpus to a parquet staging table on the
+    * [[BucketLedger]] protocol, so a killed shingling job resumes
     * mid-corpus without re-shingling completed buckets. This is the
     * "staging table write" the in-memory [[shingled]] view's doc points
     * at: at 100 TB the shingle set is written ONCE and every dedup
@@ -245,153 +245,34 @@ object DedupOps {
     * reads the staged parquet instead of re-deriving it per query.
     *
     * Layout: parquet files under `dir/bucket=i/` with columns (doc_id, sh);
-    * bucket = pmod(hash(doc_id), buckets). Ledger `_ledger.jsonl`:
-    * a header {"header":1,"buckets":N,"source":"<id>"} validated on
-    * resume (fail fast on a different bucketing or source), then one
-    * {"bucket":i,"docs":n} line per committed bucket (committed via
-    * atomic rename only after the pass's write succeeds). All pending
-    * buckets of a pass are computed in ONE scan of the corpus
-    * (partitionBy(bucket) + dynamic partition overwrite);
-    * `maxBucketsPerPass` bounds work lost to a mid-pass kill.
+    * bucket = pmod(hash(doc_id), buckets). Ledger header
+    * {"header":1,"buckets":N,"source":"<id>"} (a resume with a different
+    * bucketing or source fails fast), then one {"bucket":i,"docs":n} line
+    * per committed bucket.
     *
     * Returns (bucket, docs) for buckets completed by THIS invocation —
-    * already-done buckets are never recomputed (resume evidence).
-    *
-    * The per-bucket `docs` counts come from a task-side accumulator and
-    * are INFORMATIONAL ONLY: under task retries or speculative execution
-    * Spark may over-count accumulator updates. Resume correctness never
-    * reads them — it keys solely on bucket PRESENCE in the ledger, and
-    * the bucket data itself is committed by the write, not the count.
+    * already-done buckets are never recomputed (resume evidence). The
+    * `docs` counts are informational: resume keys on bucket presence only.
     */
   def stageShingles(base: DataFrame, dir: String, buckets: Int = 64,
                     maxBucketsPerPass: Int = Int.MaxValue,
                     sourceId: String = ""): Seq[(Int, Long)] = {
     val spark = base.sparkSession
     import spark.implicits._
-    val headerRx =
-      """"header"\s*:\s*1\s*,\s*"buckets"\s*:\s*(\d+)\s*,\s*"source"\s*:\s*"([^"]*)"""".r
-    stageLedgered(base, dir, buckets, maxBucketsPerPass, sourceId,
-      accName = "graft_shingle_stage",
-      headerLine = s"""{"header":1,"buckets":$buckets,"source":"$sourceId"}""",
-      headerRx = headerRx, kindDesc = "header",
-      validate = m => {
-        require(m.group(1).toInt == buckets,
-          s"resume with buckets=$buckets, but the staging ledger was written with buckets=${m.group(1)}")
-        require(m.group(2) == sourceId,
-          s"resume against a different source (ledger '${m.group(2)}', requested '$sourceId')")
-      }) { (slice, acc) =>
-      slice.mapPartitions { it =>
-          val counts = new java.util.HashMap[Int, Array[Long]]()
-          var flushed = false
-          new Iterator[(Long, Array[String], Int)] {
-            def hasNext: Boolean = {
-              val h = it.hasNext
-              if (!h && !flushed) {
-                flushed = true
-                counts.forEach((b, v) => acc.add((b, v(0))))
-              }
-              h
-            }
-            def next(): (Long, Array[String], Int) = {
-              val (id, t, b) = it.next()
-              counts.computeIfAbsent(b, _ => new Array[Long](1))(0) += 1
-              (id, shingleSet(t), b)
-            }
-          }
-        }
+    BucketLedger.run(dir, Seq("buckets" -> buckets, "source" -> sourceId),
+        base, maxBucketsPerPass, Seq("docs")) { (slice, tally) =>
+      slice.select(col("doc_id"), col("text"), col("bucket")).as[(Long, String, Int)]
+        .mapPartitions(it => tally(it)(_._3)((_, v) => v(0) += 1)
+          .map { case (id, t, b) => (id, shingleSet(t), b) })
         .toDF("doc_id", "sh", "bucket")
-    }
-  }
-
-  /** Shared resumable-ledger staging skeleton for [[stageShingles]] and
-    * [[stageSpanGrams]] — ONE copy of the commit protocol so ledger fixes
-    * cannot drift between the two: header validated (via `headerRx` +
-    * `validate`) or written on first run, done-set keyed on bucket
-    * PRESENCE only, per-pass single-scan staging via `buildPass` (which
-    * receives the bucketed (doc_id, text, bucket) slice and a per-pass
-    * accumulator for the informational doc counts and must return a frame
-    * carrying a `bucket` column), dynamic-partition-overwrite commit,
-    * ledger lines appended by atomic rename AFTER the write succeeds.
-    */
-  private def stageLedgered(
-      base: DataFrame, dir: String, buckets: Int, maxBucketsPerPass: Int,
-      sourceId: String, accName: String, headerLine: String,
-      headerRx: scala.util.matching.Regex, kindDesc: String,
-      validate: scala.util.matching.Regex.Match => Unit)(
-      buildPass: (org.apache.spark.sql.Dataset[(Long, String, Int)],
-                  org.apache.spark.util.CollectionAccumulator[(Int, Long)]) => DataFrame)
-      : Seq[(Int, Long)] = {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // sourceId is embedded verbatim in the ledger's JSON header line — a
-    // quote/backslash would break the header regex on resume, so restrict
-    // it to a filename-ish alphabet up front
-    require(sourceId.isEmpty || sourceId.matches("[A-Za-z0-9._/-]+"),
-      s"sourceId must match [A-Za-z0-9._/-]+ (embedded in the ledger header); got '$sourceId'")
-    val ledger = Paths.get(dir, "_ledger.jsonl")
-    Files.createDirectories(Paths.get(dir))
-
-    def ledgerLines: Seq[String] =
-      if (!Files.exists(ledger)) Nil
-      else Files.readAllLines(ledger, StandardCharsets.UTF_8).toArray(Array.empty[String]).toSeq
-    def appendLedger(lines: Seq[String]): Unit = {
-      val tmp = Paths.get(dir, "_ledger.tmp")
-      val prev = if (Files.exists(ledger))
-        new String(Files.readAllBytes(ledger), StandardCharsets.UTF_8) else ""
-      Files.write(tmp, (prev + lines.mkString("", "\n", "\n")).getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, ledger, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    }
-
-    ledgerLines.iterator.flatMap(l => headerRx.findFirstMatchIn(l)).nextOption() match {
-      case Some(m) => validate(m)
-      case None =>
-        require(ledgerLines.isEmpty,
-          s"staging ledger at $dir has lines but no $kindDesc; re-stage from scratch")
-        appendLedger(Seq(headerLine))
-    }
-    val bucketRx = """"bucket"\s*:\s*(\d+)""".r
-    val done = ledgerLines.flatMap(l => bucketRx.findFirstMatchIn(l).map(_.group(1).toInt)).toSet
-    val todo = (0 until buckets).filterNot(done)
-    val spark = base.sparkSession
-    import spark.implicits._
-    val results = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
-    for (group <- todo.grouped(math.max(1, maxBucketsPerPass))) {
-      val acc = new org.apache.spark.util.CollectionAccumulator[(Int, Long)]()
-      spark.sparkContext.register(acc, accName)
-      val slice = base
-        .withColumn("bucket", pmod(hash(col("doc_id")), lit(buckets)))
-        .where(col("bucket").isInCollection(group))
-        .select(col("doc_id"), col("text"), col("bucket"))
-        .as[(Long, String, Int)]
-      buildPass(slice, acc).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(dir)
-      val merged = new java.util.HashMap[Int, Long]()
-      acc.value.forEach { case (b, n) => merged.merge(b, n, java.lang.Long.sum(_, _)) }
-      val groupResults = group.map(b => (b, merged.getOrDefault(b, 0L)))
-      appendLedger(groupResults.map { case (b, n) => s"""{"bucket":$b,"docs":$n}""" })
-      results ++= groupResults
-    }
-    results.toSeq
+    }.map(c => (c.bucket, c.counts(0)))
   }
 
   /** Read a staged shingle table (doc_id, sh) written by [[stageShingles]].
     * Fails if any bucket is missing from the ledger (partial staging).
     */
   def stagedShingles(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.charset.StandardCharsets
-    val ledger = java.nio.file.Paths.get(dir, "_ledger.jsonl")
-    require(java.nio.file.Files.exists(ledger), s"no staging ledger at $dir")
-    val lines = java.nio.file.Files.readAllLines(ledger, StandardCharsets.UTF_8)
-      .toArray(Array.empty[String]).toSeq
-    val buckets = """"header"\s*:\s*1\s*,\s*"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(lines.mkString("\n")).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(s"staging ledger at $dir has no header"))
-    val done = lines.flatMap(l => """"bucket"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(l).map(_.group(1).toInt)).toSet
-    val missing = (0 until buckets).filterNot(done)
-    require(missing.isEmpty, s"staging at $dir is incomplete (missing buckets: ${missing.take(8).mkString(",")}...)")
+    BucketLedger.requireComplete(dir, Seq("buckets", "source"))
     spark.read.parquet(dir).select(col("doc_id"), col("sh"))
   }
 
@@ -576,83 +457,36 @@ object DedupOps {
           .as("removed_tokens"))
   }
 
-  /** Stage the POSITIONAL k-gram table (doc_id, pos, g) for span dedup,
-    * with the same resumable-ledger contract as [[stageShingles]]:
-    * doc-id-hash buckets, dynamic-partition-overwrite commits, ledger
-    * lines appended by atomic rename AFTER each pass, resume keyed on
-    * bucket presence only. The header additionally records `k` — a
-    * resume with a different gram width would silently mix gram spaces,
-    * so it fails fast. Gram strings never reach disk: they are hashed
-    * by the same `xxhash64` column expression the in-memory path uses,
-    * inside the staging job.
+  /** Stage the POSITIONAL k-gram table (doc_id, pos, g) for span dedup
+    * on the same [[BucketLedger]] protocol as [[stageShingles]]. The header
+    * {"header":1,"kind":"posgrams","buckets":N,"k":K,"source":"<id>"}
+    * also records `k` — a resume with a different gram width would
+    * silently mix gram spaces, so it fails fast. Gram strings never reach
+    * disk: they are hashed by the same `xxhash64` column expression the
+    * in-memory path uses, inside the staging job.
     */
   def stageSpanGrams(base: DataFrame, dir: String, k: Int = 13, buckets: Int = 64,
                      maxBucketsPerPass: Int = Int.MaxValue,
                      sourceId: String = ""): Seq[(Int, Long)] = {
     val spark = base.sparkSession
     import spark.implicits._
-    val headerRx =
-      """"header"\s*:\s*1\s*,\s*"kind"\s*:\s*"posgrams"\s*,\s*"buckets"\s*:\s*(\d+)\s*,\s*"k"\s*:\s*(\d+)\s*,\s*"source"\s*:\s*"([^"]*)"""".r
-    stageLedgered(base, dir, buckets, maxBucketsPerPass, sourceId,
-      accName = "graft_posgram_stage",
-      headerLine =
-        s"""{"header":1,"kind":"posgrams","buckets":$buckets,"k":$k,"source":"$sourceId"}""",
-      headerRx = headerRx, kindDesc = "posgrams header",
-      validate = m => {
-        require(m.group(1).toInt == buckets,
-          s"resume with buckets=$buckets, but the staging ledger was written with buckets=${m.group(1)}")
-        require(m.group(2).toInt == k,
-          s"resume with k=$k, but the staging ledger was written with k=${m.group(2)}")
-        require(m.group(3) == sourceId,
-          s"resume against a different source (ledger '${m.group(3)}', requested '$sourceId')")
-      }) { (slice, acc) =>
-      slice.mapPartitions { it =>
-          val counts = new java.util.HashMap[Int, Array[Long]]()
-          var flushed = false
-          new Iterator[(Long, Int, String, Int)] {
-            private var cur: Iterator[(Long, Int, String, Int)] = Iterator.empty
-            def hasNext: Boolean = {
-              while (!cur.hasNext && it.hasNext) {
-                val (id, t, b) = it.next()
-                counts.computeIfAbsent(b, _ => new Array[Long](1))(0) += 1
-                cur = posGramsOf(t, k).map { case (i, g) => (id, i, g, b) }
-              }
-              val h = cur.hasNext
-              if (!h && !it.hasNext && !flushed) {
-                flushed = true
-                counts.forEach((b, v) => acc.add((b, v(0))))
-              }
-              h
-            }
-            def next(): (Long, Int, String, Int) = cur.next()
-          }
-        }
+    BucketLedger.run(dir,
+        Seq("kind" -> "posgrams", "buckets" -> buckets, "k" -> k, "source" -> sourceId),
+        base, maxBucketsPerPass, Seq("docs")) { (slice, tally) =>
+      slice.select(col("doc_id"), col("text"), col("bucket")).as[(Long, String, Int)]
+        .mapPartitions(it => tally(it)(_._3)((_, v) => v(0) += 1)
+          .flatMap { case (id, t, b) => posGramsOf(t, k).map { case (i, g) => (id, i, g, b) } })
         .toDF("doc_id", "pos", "gram", "bucket")
         .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"), col("bucket"))
-    }
+    }.map(c => (c.bucket, c.counts(0)))
   }
 
   /** Read a staged positional-gram table written by [[stageSpanGrams]];
     * fails on partial staging or a gram-width mismatch.
     */
   def stagedSpanGrams(spark: SparkSession, dir: String, k: Int = 13): DataFrame = {
-    import java.nio.charset.StandardCharsets
-    val ledger = java.nio.file.Paths.get(dir, "_ledger.jsonl")
-    require(java.nio.file.Files.exists(ledger), s"no staging ledger at $dir")
-    val lines = java.nio.file.Files.readAllLines(ledger, StandardCharsets.UTF_8)
-      .toArray(Array.empty[String]).toSeq
-    val headerRx =
-      """"header"\s*:\s*1\s*,\s*"kind"\s*:\s*"posgrams"\s*,\s*"buckets"\s*:\s*(\d+)\s*,\s*"k"\s*:\s*(\d+)""".r
-    val m = headerRx.findFirstMatchIn(lines.mkString("\n"))
-      .getOrElse(throw new IllegalStateException(s"staging ledger at $dir has no posgrams header"))
-    val buckets = m.group(1).toInt
-    require(m.group(2).toInt == k,
-      s"staged grams at $dir were written with k=${m.group(2)}, requested k=$k")
-    val done = lines.flatMap(l => """"bucket"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(l).map(_.group(1).toInt)).toSet
-    val missing = (0 until buckets).filterNot(done)
-    require(missing.isEmpty,
-      s"staging at $dir is incomplete (missing buckets: ${missing.take(8).mkString(",")}...)")
+    BucketLedger.requireComplete(dir,
+      Seq("kind", "buckets", "k", "source"), "kind" -> "posgrams", "k" -> k)
     spark.read.parquet(dir).select(col("doc_id"), col("pos"), col("g"))
   }
 

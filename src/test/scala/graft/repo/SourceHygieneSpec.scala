@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Keeps settled experiments out of the tree: a `graft.*` JVM property in
   * library code is an A/B switch whose question a measurement should
   * answer and then delete, and a `main` in a test file that is not a
-  * Spec is a probe harness nothing runs or checks. Paths resolve against
+  * Spec is a probe harness nothing runs or checks. Also keeps one owner
+  * of the resume-ledger format (`BucketLedger`), so a second copy of the
+  * protocol cannot drift from it. Paths resolve against
   * the working directory, which sbt sets to the project base directory
   * for forked tests.
   */
@@ -32,6 +34,11 @@ class SourceHygieneSpec extends AnyFunSuite {
       if switch.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     if (hits.nonEmpty) fail(hits.mkString("A/B switches left in library code:\n", "\n", ""))
+  }
+
+  test("one module under src/main/scala owns the _ledger files") {
+    val owners = scalaFiles("src/main/scala").filter(f => read(f).contains("\"_ledger"))
+    assert(owners.size <= 1, owners.mkString("\"_ledger in more than one file:\n", "\n", ""))
   }
 
   test("only *Spec.scala files under src/test/scala declare a main") {

@@ -275,6 +275,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // is overwritten on resume (dynamic partition overwrite)
     val ledger = java.nio.file.Paths.get(dir, "_ledger.jsonl")
     val lines = java.nio.file.Files.readAllLines(ledger)
+    assert(lines.get(0) == """{"header":1,"buckets":8,"source":""}""")
     val kept = lines.subList(0, 4)
     val keptBuckets = kept.toArray(Array.empty[String]).drop(1)
       .flatMap(l => """"bucket"\s*:\s*(\d+)""".r.findFirstMatchIn(l).map(_.group(1).toInt)).toSet
@@ -307,6 +308,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a mid-run kill: header + 3 committed bucket lines survive
     val ledger = java.nio.file.Paths.get(dir, "_ledger.jsonl")
     val lines = java.nio.file.Files.readAllLines(ledger)
+    assert(lines.get(0) == """{"header":1,"kind":"posgrams","buckets":8,"k":13,"source":""}""")
     val kept = lines.subList(0, 4)
     val keptBuckets = kept.toArray(Array.empty[String]).drop(1)
       .flatMap(l => """"bucket"\s*:\s*(\d+)""".r.findFirstMatchIn(l).map(_.group(1).toInt)).toSet
@@ -1404,6 +1406,22 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(first.map(_.bucket).sorted == Seq(0, 1, 2, 3))
     assert(first.map(_.docs).sum == 500)
     assert(first.map(_.bytes).sum > 0)
+    // every reported counter equals a groupBy("bucket") over the written
+    // parquet; bytes are UTF-8 octets of text spans
+    def written(d: String): Map[Int, Seq[Long]] = {
+      import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
+      spark.read.parquet(d).groupBy("bucket").agg(
+        count(lit(1)),
+        sum(expr("size(filter(spans, s -> s.kind = 'text'))")),
+        sum(expr("size(filter(spans, s -> s.kind <> 'text'))")),
+        count(col("error")),
+        sum(expr("aggregate(filter(spans, s -> s.kind = 'text'), 0L, " +
+          "(a, s) -> a + octet_length(s.text))")))
+        .collect().map(r => r.getInt(0) -> (1 to 5).map(r.getLong)).toMap
+    }
+    def reported(rs: Seq[CheckpointedExtract.BucketResult]): Map[Int, Seq[Long]] =
+      rs.map(r => r.bucket -> Seq(r.docs, r.textSpans, r.mediaSpans, r.errors, r.bytes)).toMap
+    assert(reported(first) == written(dir))
     // simulate a crash after 2 buckets: keep header + first two bucket lines
     val p = java.nio.file.Paths.get(dir, "_ledger.jsonl")
     val lines = java.nio.file.Files.readAllLines(p)
@@ -1412,6 +1430,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       String.join("\n", lines.subList(0, 3)).concat("\n").getBytes("UTF-8"))
     val resumed = CheckpointedExtract.run(docs, dir, buckets = 4)
     assert(resumed.map(_.bucket).sorted == Seq(2, 3))
+    assert(reported(resumed) == written(dir).filter { case (b, _) => b >= 2 })
     // full output present exactly once
     val n = spark.read.parquet(s"$dir/bucket=*").count()
     assert(n == 500)
@@ -1428,6 +1447,18 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val two = CheckpointedExtract.run(docs, dir2, buckets = 4, maxBucketsPerPass = 2)
     assert(two.map(_.bucket).sorted == Seq(0, 1, 2, 3))
     assert(spark.read.parquet(s"$dir2/bucket=*").count() == 500)
+    assert(reported(two) == written(dir2))
+    // no buckets is no partitioning: refused, not "completed 0 buckets"
+    val dir3 = java.nio.file.Files.createTempDirectory("graft_ckpt3").toString
+    intercept[IllegalArgumentException](CheckpointedExtract.run(docs, dir3, buckets = 0))
+    // a ledger without this run's header (here a shingle staging header)
+    // fails fast and is left as it was
+    val foreign = java.nio.file.Files.createTempDirectory("graft_ckpt_foreign")
+    val shingleHeader = "{\"header\":1,\"buckets\":4,\"source\":\"\"}\n"
+    java.nio.file.Files.write(foreign.resolve("_ledger.jsonl"), shingleHeader.getBytes("UTF-8"))
+    intercept[IllegalArgumentException](CheckpointedExtract.run(docs, foreign.toString, buckets = 4))
+    assert(new String(java.nio.file.Files.readAllBytes(foreign.resolve("_ledger.jsonl")),
+      "UTF-8") == shingleHeader)
   }
 
   test("streaming extraction over a file stream matches batch output") {
