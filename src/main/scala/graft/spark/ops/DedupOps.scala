@@ -688,26 +688,10 @@ object DedupOps {
                               dfCap: Int = DefaultShingleDfCap): DataFrame = {
     // postings memo, same evidence as [[ngramJaccardPairs]]
     val withSh = shingled(base).select(col("doc_id"), col("sh"))
-    ngramJaccardPairsCappedCore(withSh, postingsOf(withSh), threshold, memberCap, dfCap)
-  }
-
-  /** d2b over a pre-staged shingle table (see [[stageShingles]]). */
-  def ngramJaccardPairsCappedStaged(spark: SparkSession, dir: String, threshold: Double,
-                                    memberCap: Int = DefaultPairMemberCap,
-                                    dfCap: Int = DefaultShingleDfCap): DataFrame =
-    ngramJaccardPairsCappedFromShingled(stagedShingles(spark, dir), threshold, memberCap, dfCap)
-
-  private def ngramJaccardPairsCappedFromShingled(withSh: DataFrame, threshold: Double,
-                                                  memberCap: Int, dfCap: Int): DataFrame =
-    ngramJaccardPairsCappedCore(withSh, rawPostings(withSh), threshold, memberCap, dfCap)
-
-  private def ngramJaccardPairsCappedCore(withSh: DataFrame, posts: DataFrame,
-                                          threshold: Double,
-                                          memberCap: Int, dfCap: Int): DataFrame = {
     val sizes = withSh.select(col("doc_id"), size(col("sh")).as("set_size"))
     val spark = withSh.sparkSession
     import spark.implicits._
-    val inverted = posts
+    val inverted = postingsOf(withSh)
       .observe("ngram_capped_buckets",
         sum(when(size(col("ids")) > dfCap, 1L).otherwise(0L)).as("dropped_shingles_capped"),
         sum(when(size(col("ids")).between(memberCap + 1, dfCap), 1L).otherwise(0L))
@@ -965,8 +949,9 @@ object DedupOps {
       case _ => ()
     }
 
-  /** Rounds the last [[clusterIdsStar]] call took to converge (test
-    * evidence for the O(log n) bound; not thread-safe, diagnostics only).
+  /** Rounds the last [[clusterIdsStar]] call ran; every one changed the
+    * edge list (test evidence for the O(log n) bound; not thread-safe,
+    * diagnostics only).
     */
   private[graft] var lastStarRounds = 0
 
@@ -988,10 +973,12 @@ object DedupOps {
     * huge neighbor array. The min aggregate partial-combines map-side, so
     * the root of a large component (the only high-degree group key) is
     * reduced before the exchange. Per round: one groupBy + one join on
-    * the edge list; convergence is an exact set-equality check (count
-    * match + anti-join), not a checksum. Each round's edge list is
-    * materialized with lineage TRUNCATION (localCheckpoint) — one round
-    * references the previous edge list four times, so carrying the
+    * the edge list. The loop stops on the first star forest (every u has
+    * exactly one v, no v is also a u): edges are oriented (big, small)
+    * and both star operations preserve components, so each star's centre
+    * is its component's minimum — no confirming round. Each round's edge
+    * list is materialized with lineage TRUNCATION (localCheckpoint) — one
+    * round references the previous edge list four times, so carrying the
     * logical plan across rounds would grow it exponentially; on a real
     * cluster with executor churn, set a checkpoint dir and swap in
     * `checkpoint()` for fault-tolerant truncation.
@@ -1002,25 +989,32 @@ object DedupOps {
       clusterIdsStarUncached(base, pairs)
     }
 
+  /** One action: every `u` of the (distinct, oriented) edge list has
+    * exactly one `v`, and no `v` is also a `u`.
+    */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges.select(col("u").as("n"), lit(1).as("outs"), lit(false).as("isV"))
+      .unionAll(edges.select(col("v").as("n"), lit(0).as("outs"), lit(true).as("isV")))
+      .groupBy("n").agg(sum("outs").as("outs"), max("isV").as("isV"))
+      .where(col("outs") > 1 || (col("outs") === 1 && col("isV")))
+      .isEmpty
+
   private def clusterIdsStarUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val nodes = base.select(col("doc_id")).distinct()
     // canonical orientation (big, small); drop self-pairs. LAZY
-    // checkpoints throughout (round 7): the stat job that follows each
-    // materialization is the FIRST action over it, so it materializes
-    // the checkpoint and returns the stat in one job — the eager variant
-    // paid a separate job per round (2x the driver round-trips on an
-    // iterative algorithm whose per-round data is tiny)
+    // checkpoints throughout: the star-forest test that follows each one
+    // is its first action, so it materializes the checkpoint in the same
+    // job — an eager checkpoint would pay a separate job per round
     var edges = pairs.select(
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint(false)
-    var nEdges = edges.count()
-    var converged = nEdges == 0L
     var rounds = 0
-    while (!converged) {
+    var done = isStarForest(edges)
+    while (!done) {
       // large-star: for each node u over its SYMMETRIC neighborhood,
       // connect every strictly larger neighbor to m = min(N(u) ∪ {u})
       val sym = edges.select(col("u").as("a"), col("v").as("b"))
@@ -1040,28 +1034,15 @@ object DedupOps {
         .unionAll(minsS.select(col("u"), col("m").as("v")))
         .distinct()
         .localCheckpoint(false)
-      // set equality = same size + nothing new. ONE aggregation job
-      // returns (count, matched-against-previous) together — round 4 ran
-      // a count job PLUS an anti-join probe job per round, doubling the
-      // driver round-trips a contended driver multiplies (p1 read 42 s
-      // driver vs 4 s quiet purely from per-round latency)
-      val stats = next
-        .join(edges.select(col("u"), col("v"), lit(1).as("old")), Seq("u", "v"), "left")
-        .agg(count(lit(1)).as("n"), count(col("old")).as("matched"))
-        .collect()(0)
-      val nNext = stats.getLong(0)
-      val grew = stats.getLong(1) < nNext
-      converged = !grew && nNext == nEdges
-      nEdges = nNext
-      releaseRound(edges) // the anti-join above was its last consumer
+      done = isStarForest(next)
+      releaseRound(edges) // materializing `next` was its last read
       edges = next
       rounds += 1
     }
     lastStarRounds = rounds
-    // converged: stars point every member at its component root (the min)
+    // a star forest: each member's one edge points at its component root
     val labels = nodes
-      .join(edges.groupBy(col("u").as("doc_id")).agg(min("v").as("root")),
-        Seq("doc_id"), "left")
+      .join(edges.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("root"), col("doc_id")).as("cluster_id"))
       .persist(lvl)

@@ -106,18 +106,4 @@ object StreamingExtract {
       }
       .start()
   }
-
-  /** Windowed span-rate metrics over a stream of (doc batch arrival time,
-    * span counts): tumbling 10s windows with a 30s watermark — the
-    * event-time aggregation shape for production monitoring.
-    */
-  def spanRate(extracted: DataFrame): DataFrame = {
-    extracted
-      .withColumn("arrival", current_timestamp())
-      .withWatermark("arrival", "30 seconds")
-      .groupBy(window(col("arrival"), "10 seconds"))
-      .agg(count(lit(1)).as("docs"),
-        sum(size(col("spans"))).as("spans"),
-        sum(when(col("error").isNotNull, 1).otherwise(0)).as("errors"))
-  }
 }

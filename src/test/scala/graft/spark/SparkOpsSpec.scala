@@ -1655,6 +1655,64 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after - before <= 2, s"leaked checkpoints: $before -> $after")
     out.unpersist()
   }
+
+  test("star components stop on the first star forest: no confirming round") {
+    val sp = spark
+    import sp.implicits._
+    def rounds(nodes: Seq[Long], pairs: Seq[(Long, Long)]): Int = {
+      DedupOps.lastStarRounds = -1 // a memo hit would leave it untouched
+      DedupOps.clusterIdsStar(nodes.toDF("doc_id"), pairs.toDF("id_a", "id_b")).unpersist()
+      DedupOps.lastStarRounds
+    }
+    // one round turns a 10-clique and a 3-path into stars
+    val clique = for (a <- 0L until 10L; b <- a + 1 until 10L) yield (a, b)
+    assert(rounds((0L until 10L) ++ Seq(20L, 21L, 22L),
+      clique ++ Seq((20L, 21L), (21L, 22L))) == 1)
+    // no v is also a u, but 3003 has three v's: not a star forest yet
+    assert(rounds(3000L to 3003L, Seq((3003L, 3000L), (3001L, 3003L), (3003L, 3002L))) == 1)
+    // disjoint pairs and an empty pair list are star forests already
+    assert(rounds(1000L until 1010L, (1000L until 1010L by 2).map(a => (a + 1, a))) == 0)
+    assert(rounds(2000L until 2005L, Seq.empty) == 0)
+  }
+
+  test("star components == union-find component minimum on seeded random graphs") {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(7)
+    // components over local indices 0 until k, as (k, edges)
+    def tree(k: Int) = (k, (1 until k).map(i => (i, rnd.nextInt(i))))
+    def cycle(k: Int) = (k, (0 until k).map(i => (i, (i + 1) % k)))
+    def clique(k: Int) = (k, for (a <- 0 until k; b <- a + 1 until k) yield (a, b))
+    def chain(k: Int) = (k, (1 until k).map(i => (i - 1, i)))
+    def star(k: Int) = (k, (1 until k).map(i => (0, i)))
+    def sparse(k: Int) = (k, Seq.fill(k)((rnd.nextInt(k), rnd.nextInt(k)))) // self-pairs too
+    val comps = Seq(tree(30), tree(30), tree(45), cycle(12), cycle(17), clique(9), clique(12),
+      chain(60), chain(75), star(25), star(40), sparse(80),
+      (10, Seq.empty[(Int, Int)])) // isolated nodes
+    // one shuffled id space: no component's minimum sits at its local 0
+    val ids = rnd.shuffle((0L until comps.map(_._1).sum.toLong).toVector).map(_ * 3 + 5)
+    val offsets = comps.map(_._1).scanLeft(0)(_ + _)
+    val pairsSeq = comps.zip(offsets).flatMap { case ((_, es), off) =>
+      es.map { case (a, b) =>
+        val (x, y) = (ids(off + a), ids(off + b))
+        if (rnd.nextBoolean()) (x, y) else (y, x) // both orientations
+      }
+    }
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = parent.get(x) match {
+      case Some(p) if p != x => val r = find(p); parent(x) = r; r
+      case _ => x
+    }
+    for ((u, v) <- pairsSeq) {
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    val out = DedupOps.clusterIdsStar(ids.toDF("doc_id"),
+      (pairsSeq ++ pairsSeq.take(20)).toDF("id_a", "id_b")) // duplicate pairs too
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got.sorted == ids.sorted.map(n => n -> find(n)))
+    out.unpersist()
+  }
 }
 
 /** Clustered-embedding IVF evidence (round-2 verdict ask): on blob-shaped
