@@ -13,10 +13,6 @@ final case class InSpan(kind: String, text: String, media_ref: String, offset: I
 final case class InterleavedDoc(doc_id: String, spans: Seq[InSpan])
 final case class ExtractedDoc(doc_id: String, spans: Seq[InSpan], error: String)
 
-/** Per-partition extraction metrics for the run ledger. */
-final case class PartMetrics(partition: Int, docs: Long, bytes: Long,
-                             textSpans: Long, mediaSpans: Long, errors: Long)
-
 /** Deterministic synthetic interleaved-document generator, driven by the
   * provided `documents` parquet table (TESTDATA.md) so DuckDB oracles can
   * recompute expected extraction output with plain SQL:
@@ -177,17 +173,6 @@ object ExtractPipeline {
     extractDF(ds.toDF(), policy).as[ExtractedDoc]
   }
 
-  /** Salted repartition for skewed inputs: distributes rows uniformly by
-    * doc_id hash before extraction (one shuffle, then map-only). doc_id is
-    * high-cardinality, so hash partitioning is the salt. Balances row
-    * COUNTS; for byte-skewed corpora use [[extractSizeBalanced]].
-    */
-  def extractBalanced(ds: Dataset[InterleavedDoc], partitions: Int,
-                      policy: ExtractPolicy = ExtractPolicy.Default): Dataset[ExtractedDoc] = {
-    val salted = ds.repartition(partitions, col("doc_id"))
-    extract(salted.as[InterleavedDoc](ds.sparkSession.implicits.newProductEncoder), policy)
-  }
-
   /** Byte-aware balanced extraction for size-skewed corpora (SURVEY §4
     * physical-layout row). A hash repartition balances row counts, not
     * bytes: a handful of 100x documents land on random tasks and the
@@ -262,26 +247,5 @@ object ExtractPipeline {
       .repartition(numParts, col("_key"))
       .drop("_bytes", "_pid", "_key")
     extract(keyed.as[InterleavedDoc](spark.implicits.newProductEncoder), policy)
-  }
-
-  /** Extraction + per-partition metrics (the run-ledger payload). */
-  def extractWithMetrics(ds: Dataset[InterleavedDoc],
-                         policy: ExtractPolicy = ExtractPolicy.Default)
-      : (Dataset[ExtractedDoc], Dataset[PartMetrics]) = {
-    val out = extract(ds, policy)
-    import ds.sparkSession.implicits._
-    val metrics = out.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var docs = 0L; var bytes = 0L; var ts = 0L; var ms = 0L; var errs = 0L
-      it.foreach { d =>
-        docs += 1
-        d.spans.foreach { s =>
-          if (s.kind == "text") { ts += 1; bytes += utf8Bytes(s.text) } else ms += 1
-        }
-        if (d.error != null) errs += 1
-      }
-      Iterator.single(PartMetrics(pid, docs, bytes, ts, ms, errs))
-    }
-    (out, metrics)
   }
 }

@@ -1,5 +1,7 @@
 package graft.spark.ops
 
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.BucketLedger
@@ -936,22 +938,10 @@ object DedupOps {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Release the storage behind a round materialized with
-    * `localCheckpoint(true)` — the checkpointed RDD's blocks otherwise
-    * live until the driver GCs the dereferenced Dataset, so an iterative
-    * algorithm would hold O(rounds) dead snapshots in executor storage.
-    * Only call on rounds nothing will read again (a localCheckpoint has
-    * no lineage to recompute from).
-    */
-  private def releaseRound(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Rounds the last [[clusterIdsStar]] call ran; every one changed the
-    * edge list (test evidence for the O(log n) bound; not thread-safe,
-    * diagnostics only).
+    * edge list and ran as one Spark job together with its star-forest
+    * check (test evidence for the O(log n) bound and the per-call job
+    * count; not thread-safe, diagnostics only).
     */
   private[graft] var lastStarRounds = 0
 
@@ -968,18 +958,26 @@ object DedupOps {
     * cluster-assignment table is computed once per corpus and every
     * apply/curate/audit consumer reads it.
     *
-    * Scale notes: both star operations are expressed as join + min-agg —
-    * no collect_set, so a giant star never materializes one row with a
-    * huge neighbor array. The min aggregate partial-combines map-side, so
-    * the root of a large component (the only high-degree group key) is
-    * reduced before the exchange. Per round: one groupBy + one join on
-    * the edge list. The loop stops on the first star forest (every u has
-    * exactly one v, no v is also a u): edges are oriented (big, small)
-    * and both star operations preserve components, so each star's centre
-    * is its component's minimum — no confirming round. Each round's edge
-    * list is materialized with lineage TRUNCATION (localCheckpoint) — one
-    * round references the previous edge list four times, so carrying the
-    * logical plan across rounds would grow it exponentially; on a real
+    * Scale notes: the rounds run over an `RDD[(Long, Long)]` of (big,
+    * small) edges. One `HashPartitioner` (the session's shuffle partition
+    * count) keys every step, so each min aggregate (`reduceByKey`) and
+    * each join of two sides keyed by it is narrow: a round and its
+    * star-forest check are ONE Spark job, where DataFrames under AQE paid
+    * a query-stage job (and generated classes) per exchange. Shuffles
+    * carry primitive `(Long, Long)` or `(Long, Int)` records, for which
+    * Spark picks Kryo on its own. Set semantics: the edge list is keyed
+    * by u, so every copy of an edge lands in one partition, where a hash
+    * set drops it (one partition's distinct edges in memory; a round maps
+    * each edge to at most one edge, so never more than the input pairs).
+    * Both star operations are min aggregates plus a join, never a
+    * collected neighbor list, and the mins combine map-side, so the root
+    * of a large component (the only high-degree key) is reduced before
+    * it shuffles. Known trade-off: RDD joins lose AQE's skew-join split.
+    * The loop stops on the first star forest (every u has exactly one v,
+    * no v is also a u): edges are oriented (big, small) and both star
+    * operations preserve components, so each star's centre is its
+    * component's minimum — no confirming round. Each round's edge list is
+    * materialized with lineage TRUNCATION (`localCheckpoint`); on a real
     * cluster with executor churn, set a checkpoint dir and swap in
     * `checkpoint()` for fault-tolerant truncation.
     */
@@ -989,63 +987,76 @@ object DedupOps {
       clusterIdsStarUncached(base, pairs)
     }
 
-  /** One action: every `u` of the (distinct, oriented) edge list has
-    * exactly one `v`, and no `v` is also a `u`.
+  // a node's roles in the star-forest check, summed per node: its
+  // out-edge count (saturated at 2) in the low bits, and whether it is
+  // some edge's v
+  private val OneOut: Int = 1
+  private val IsV: Int = 4
+  private def addRoles(a: Int, b: Int): Int = math.min((a & 3) + (b & 3), 2) | ((a | b) & IsV)
+
+  /** One action, one read of each edge (as its u and v roles): every `u`
+    * of the distinct, oriented edge list has exactly one `v`, and no `v`
+    * is also a `u`.
     */
-  private def isStarForest(edges: DataFrame): Boolean =
-    edges.select(col("u").as("n"), lit(1).as("outs"), lit(false).as("isV"))
-      .unionAll(edges.select(col("v").as("n"), lit(0).as("outs"), lit(true).as("isV")))
-      .groupBy("n").agg(sum("outs").as("outs"), max("isV").as("isV"))
-      .where(col("outs") > 1 || (col("outs") === 1 && col("isV")))
-      .isEmpty
+  private def isStarForest(edges: RDD[(Long, Long)], part: Partitioner): Boolean =
+    edges.flatMap { case (u, v) => Iterator((u, OneOut), (v, IsV)) }
+      .reduceByKey(part, addRoles _)
+      .filter { case (_, r) => (r & 3) > 1 || r == (OneOut | IsV) }
+      .count() == 0
+
+  /** Edges keyed on u by `part`, duplicates dropped: every copy of an edge
+    * shares its u, so one partition sees them all.
+    */
+  private def distinctEdges(edges: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
+    edges.partitionBy(part).mapPartitions({ it =>
+      val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+      it.filter(seen.add)
+    }, preservesPartitioning = true)
 
   private def clusterIdsStarUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val spark = base.sparkSession
+    import spark.implicits._
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
     val nodes = base.select(col("doc_id")).distinct()
     // canonical orientation (big, small); drop self-pairs. LAZY
     // checkpoints throughout: the star-forest test that follows each one
     // is its first action, so it materializes the checkpoint in the same
     // job — an eager checkpoint would pay a separate job per round
-    var edges = pairs.select(
+    var edges = distinctEdges(pairs.select(
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
+      .as[(Long, Long)].rdd, part)
+      .localCheckpoint()
     var rounds = 0
-    var done = isStarForest(edges)
+    var done = isStarForest(edges, part)
     while (!done) {
-      // large-star: for each node u over its SYMMETRIC neighborhood,
-      // connect every strictly larger neighbor to m = min(N(u) ∪ {u})
-      val sym = edges.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(edges.select(col("v").as("a"), col("u").as("b")))
-      val minsL = sym.groupBy("a").agg(min("b").as("minb"))
-        .select(col("a"), least(col("minb"), col("a")).as("m"))
-      val afterLarge = sym.join(minsL, "a")
-        .where(col("b") > col("a"))
-        .select(col("b").as("u"), col("m").as("v"))
-        .distinct()
-      // small-star: edges are (big, small); connect every small neighbor
-      // (and u itself) to the min small neighbor
-      val minsS = afterLarge.groupBy("u").agg(min("v").as("m"))
-      val next = afterLarge.join(minsS, "u")
-        .where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(minsS.select(col("u"), col("m").as("v")))
-        .distinct()
-        .localCheckpoint(false)
-      done = isStarForest(next)
-      releaseRound(edges) // materializing `next` was its last read
+      // large-star: edges are (big, small), so min(N(a) ∪ {a}) is a's
+      // smallest v (a itself if it has none); every edge (u, a) becomes
+      // (u, that minimum)
+      val minV = edges.reduceByKey(part, math.min(_, _))
+      val large = edges.map(_.swap).partitionBy(part)
+        .leftOuterJoin(minV, part)
+        .map { case (a, (u, m)) => (u, m.getOrElse(a)) }
+        .partitionBy(part)
+      // small-star: every small neighbor of u other than its min m joins m;
+      // u's own edge to m stays
+      val minS = large.reduceByKey(part, math.min(_, _))
+      val next = distinctEdges(large.join(minS, part).map {
+        case (u, (v, m)) => if (v == m) (u, m) else (v, m)
+      }, part).localCheckpoint()
+      done = isStarForest(next, part)
+      edges.unpersist(blocking = false) // materializing `next` was its last read
       edges = next
       rounds += 1
     }
     lastStarRounds = rounds
     // a star forest: each member's one edge points at its component root
     val labels = nodes
-      .join(edges.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
+      .join(edges.toDF("doc_id", "root"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("root"), col("doc_id")).as("cluster_id"))
-      .persist(lvl)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     labels.count()
     // the final edge list stays: it is the lineage the persisted labels
     // recompute from once the memo unpersists them

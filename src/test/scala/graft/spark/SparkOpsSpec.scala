@@ -48,8 +48,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("extract metrics cover all docs") {
-    val (_, metrics) = ExtractPipeline.extractWithMetrics(InterleavedGen.table(spark, sf))
-    val m = metrics.collect()
+    val dir = java.nio.file.Files.createTempDirectory("graft_metrics").toString
+    val m = CheckpointedExtract.run(InterleavedGen.table(spark, sf), dir, buckets = 4)
     assert(m.map(_.docs).sum == 500)
     assert(m.map(_.errors).sum == 0)
     assert(m.map(_.textSpans).sum > 500)
@@ -1570,7 +1570,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val skewed = InterleavedGen.table(spark, sf).coalesce(1)
       assert(skewed.rdd.getNumPartitions == 1)
-      val balanced = ExtractPipeline.extractBalanced(skewed, partitions = 8)
+      val balanced = ExtractPipeline.extractSizeBalanced(skewed,
+        targetBytesPerPartition = Long.MaxValue, minPartitions = 8)
       val sizes = balanced.toDF().groupBy(spark_partition_id()).count().collect().map(_.getLong(1))
       assert(sizes.length == 8, sizes.mkString(","))
       assert(sizes.min > 30, s"unbalanced: ${sizes.mkString(",")}") // ~62 expected per partition
@@ -1673,6 +1674,48 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // disjoint pairs and an empty pair list are star forests already
     assert(rounds(1000L until 1010L, (1000L until 1010L by 2).map(a => (a + 1, a))) == 0)
     assert(rounds(2000L until 2005L, Seq.empty) == 0)
+  }
+
+  test("star components run one job per round plus a fixed few") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sp = spark
+    import sp.implicits._
+    val sc = spark.sparkContext
+    val (group, marker) = ("star-cc-jobs", "star-cc-jobs-marker")
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    val clique = for (a <- 0L until 10L; b <- a + 1 until 10L) yield (a, b)
+    val nodes = ((0L until 10L) ++ Seq(20L, 21L, 22L)).toDF("doc_id")
+    val pairs = (clique ++ Seq((20L, 21L), (21L, 22L))).toDF("id_a", "id_b")
+    DedupOps.clearPairsCache() // uncached: an earlier test built this view
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one clusterIdsStar call")
+      val out = try DedupOps.clusterIdsStar(nodes, pairs) finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the marker job
+      // has started, every job of the call has been counted
+      sc.setJobGroup(marker, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS))
+      val rounds = DedupOps.lastStarRounds
+      assert(rounds == 1)
+      // one job per round (the round and its star-forest check), plus c =
+      // 7 measured: the initial edge list's check and the six AQE
+      // query-stage jobs of the labels' join, persist and count
+      val c = 7
+      assert(jobs.get <= rounds + c, s"jobs=${jobs.get} rounds=$rounds")
+      out.unpersist()
+    } finally sc.removeSparkListener(listener)
   }
 
   test("star components == union-find component minimum on seeded random graphs") {
