@@ -35,7 +35,7 @@ object SparkEntry {
 
   /** The t25/t26 pollution table: doc_id%8 selects a text mutation that
     * trips exactly one Gopher rule family (mirrored in both oracles). */
-  private def gopherPollutedText: org.apache.spark.sql.Column = {
+  private[graft] def gopherPollutedText: org.apache.spark.sql.Column = {
     val did = col("doc_id")
     val r = (did % 8).cast("int")
     val ell = "\nto be continued soon..."
@@ -49,6 +49,53 @@ object SparkEntry {
       .when(r === 7, concat(lit("the that"),
         repeat(lit(" pneumonoultramicroscopic"), 19)))
       .otherwise(col("text"))
+  }
+
+  /** The t23 multi-line text over documents(doc_id, text): every C4
+    * rule bites somewhere — two planted lines fail (javascript mention;
+    * under 5 words), one fails terminal punctuation, and the %11 / %13
+    * residues plant the lorem-ipsum / curly-brace document kills. */
+  private[graft] def c4FilterText: org.apache.spark.sql.Column = {
+    val did = col("doc_id")
+    concat(
+      lit("document "), did.cast("string"), lit(" begins here with several words.\n"),
+      col("text"), lit(".\n"),
+      lit("enable javascript to view this content now.\n"),
+      lit("short line\n"),
+      lit("this line has many words but no terminal punctuation at all"),
+      when(did % 11 === 0, lit("\nlorem ipsum dolor sit amet.")).otherwise(lit("")),
+      when(did % 13 === 0, lit("\nvar config = { mode: 1 };")).otherwise(lit("")),
+      lit("\nthe footer mentions privacy and cookies today."))
+  }
+
+  /** The p5 funnel text over documents(doc_id, text, source): t23's
+    * lines plus doc_id%4 surviving boilerplate copies, so C4 kills (%11
+    * lorem), the battery kills (word count > 90 on long docs) and
+    * dup-lines kill (%4 >= 2) each bite independently. */
+  private[graft] def qualityFunnelText: org.apache.spark.sql.Column = {
+    val did = col("doc_id")
+    val boiler = concat(lit("all rights reserved to "), col("source"), lit(" today.\n"))
+    concat(
+      lit("document "), did.cast("string"), lit(" begins here with several words.\n"),
+      col("text"), lit(".\n"),
+      lit("enable javascript to view this content now.\n"),
+      lit("short line\n"),
+      when(did % 11 === 0, lit("lorem ipsum dolor sit amet.\n")).otherwise(lit("")),
+      call_function("repeat", boiler, (did % 4).cast("int")),
+      lit("the footer mentions privacy and cookies today."))
+  }
+
+  /** The t24 text over documents(doc_id, text, source): the text split
+    * into two distinct halves plus doc_id%4 copies of a boilerplate
+    * line, so docs carry 0..3 duplicates and the 0.30/0.20 thresholds
+    * bite. */
+  private[graft] def dupLinesText: org.apache.spark.sql.Column = {
+    val half = floor(length(col("text")) / 2).cast("int")
+    val boiler = concat(lit("\nall rights reserved to "), col("source"), lit("."))
+    concat(
+      col("text").substr(lit(1), half), lit("\n"),
+      col("text").substr(half + 1, length(col("text"))),
+      call_function("repeat", boiler, (col("doc_id") % 4).cast("int")))
   }
 
   /** The t10/t16 deterministic URL synthesis (mirrored in UrlNormCte's
@@ -258,48 +305,24 @@ object SparkEntry {
     "t12_banned" -> ((s, dir) =>
       TextOps.bannedPhrases(s.read.parquet(s"$dir/documents.parquet"),
         BannedPhraseList)),
-    // t23: C4 line-level cleaning over a synthesized multi-line corpus —
-    // every rule bites somewhere: two planted lines fail (javascript
-    // mention; under 5 words), one fails terminal punctuation, and the
-    // %11 / %13 residues plant the lorem-ipsum / curly-brace document
-    // kills. Map-only.
+    // t23: C4 line-level cleaning over a synthesized multi-line corpus
+    // (c4FilterText: every rule bites somewhere). Map-only.
     "t23_c4_filter" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val did = col("doc_id")
-      val multiline = concat(
-        lit("document "), did.cast("string"), lit(" begins here with several words.\n"),
-        col("text"), lit(".\n"),
-        lit("enable javascript to view this content now.\n"),
-        lit("short line\n"),
-        lit("this line has many words but no terminal punctuation at all"),
-        when(did % 11 === 0, lit("\nlorem ipsum dolor sit amet.")).otherwise(lit("")),
-        when(did % 13 === 0, lit("\nvar config = { mode: 1 };")).otherwise(lit("")),
-        lit("\nthe footer mentions privacy and cookies today."))
-      TextOps.c4LineFilter(docs.select(did, multiline.as("text")))
+      TextOps.c4LineFilter(docs.select(col("doc_id"), c4FilterText.as("text")))
     }),
     // p5: composed QUALITY FUNNEL — C4 line cleaning -> the Gopher
     // document battery AND dup-line signals over the CLEANED text, all
     // via the column-level signal builders so the whole three-stage
-    // pipeline is ONE map-only projection (no join-back per stage).
-    // Construction: t23's lines + doc_id%4 surviving boilerplate copies,
-    // so C4 kills (%11 lorem), the battery kills (word count > 90 on
-    // long docs) and dup-lines kill (%4 >= 2) each bite independently
+    // pipeline is ONE map-only projection (no join-back per stage), over
+    // qualityFunnelText (each stage bites independently)
     "p5_quality_funnel" -> ((s, dir) => {
       // NOT spread (round 7): p5's contract is ONE map-only projection
       // with zero exchanges (SparkOpsSpec pins it; the same stateless
       // shape is what lets the funnel run unchanged under readStream)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val did = col("doc_id")
-      val boiler = concat(lit("all rights reserved to "), col("source"), lit(" today.\n"))
-      val ml = concat(
-        lit("document "), did.cast("string"), lit(" begins here with several words.\n"),
-        col("text"), lit(".\n"),
-        lit("enable javascript to view this content now.\n"),
-        lit("short line\n"),
-        when(did % 11 === 0, lit("lorem ipsum dolor sit amet.\n")).otherwise(lit("")),
-        call_function("repeat", boiler, (did % 4).cast("int")),
-        lit("the footer mentions privacy and cookies today."))
-      val c4 = TextOps.c4Signals(ml)
+      val c4 = TextOps.c4Signals(qualityFunnelText)
       val step1 = docs.select(did,
         c4.getField("clean_text").as("clean_text"),
         c4.getField("n_kept").as("n_kept"),
@@ -314,19 +337,11 @@ object SparkEntry {
         dl.getField("kept").as("kept_dl"),
         (col("kept_c4") && gq.getField("kept") && dl.getField("kept")).as("kept"))
     }),
-    // t24: Gopher duplicate-line signals — the text split into two
-    // distinct halves plus doc_id%4 copies of a boilerplate line, so
-    // docs carry 0..3 duplicates and the 0.30/0.20 thresholds bite
+    // t24: Gopher duplicate-line signals over dupLinesText (0..3
+    // duplicates per doc, so the 0.30/0.20 thresholds bite)
     "t24_dup_lines" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val did = col("doc_id")
-      val half = floor(length(col("text")) / 2).cast("int")
-      val boiler = concat(lit("\nall rights reserved to "), col("source"), lit("."))
-      val ml = concat(
-        col("text").substr(lit(1), half), lit("\n"),
-        col("text").substr(half + 1, length(col("text"))),
-        call_function("repeat", boiler, (did % 4).cast("int")))
-      TextOps.gopherDupLines(docs.select(did, ml.as("text")))
+      TextOps.gopherDupLines(docs.select(col("doc_id"), dupLinesText.as("text")))
     }),
     // t25: Gopher document-level quality battery — doc_id%8 selects a
     // pollution that trips exactly one rule family (ellipsis lines,

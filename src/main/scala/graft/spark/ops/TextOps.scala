@@ -1,7 +1,9 @@
 package graft.spark.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumns
 
 /** Text-analysis operators for a large-scale training-data pipeline, all
   * expressed as Catalyst column expressions (whole-stage codegen, no UDFs):
@@ -708,29 +710,18 @@ object TextOps {
     * lines survived. Returns (doc_id, n_lines, n_kept, clean_text,
     * kept) with clean_text the surviving lines re-joined by newline.
     *
-    * Map-only (one projection, no shuffle — every rule is row-local),
-    * whole-stage-codegen-free HOF lambdas are fine here: the filter
-    * binds only its own element, no outer-subtree re-evaluation (the
-    * round-1 lambda gotcha does not apply). The oracle replays the
-    * identical rules via DuckDB list_filter.
+    * Map-only (one projection, no shuffle — every rule is row-local).
+    * The signals are one codegen'd [[C4Signals]] expression: a single
+    * pass of [[QualityKernel.c4]] over the row's lines, with no line
+    * array, no lambda and no regex. The oracle replays the identical
+    * rules via DuckDB list_filter.
     */
   /** Column-level C4 signals over any text column (so composed
     * pipelines like p5 stay ONE map-only projection — no join-back per
     * stage). Struct fields: n_lines, n_kept, clean_text, kept.
     */
-  def c4Signals(text: Column, minWords: Int = 5, minKeptLines: Int = 3): Column = {
-    val lines = split(text, "\n")
-    val keptLines = filter(lines, l =>
-      size(split(l, " ")) >= minWords &&
-        l.rlike("[.!?\"]$") &&
-        !l.contains("javascript"))
-    val docOk = !text.contains("{") && !text.contains("lorem ipsum")
-    struct(
-      size(lines).as("n_lines"),
-      size(keptLines).as("n_kept"),
-      array_join(keptLines, "\n").as("clean_text"),
-      (docOk && size(keptLines) >= minKeptLines).as("kept"))
-  }
+  def c4Signals(text: Column, minWords: Int = 5, minKeptLines: Int = 3): Column =
+    native(C4Signals(_, minWords, minKeptLines))(text)
 
   def c4LineFilter(df: DataFrame, minWords: Int = 5, minKeptLines: Int = 3): DataFrame = {
     val s = c4Signals(col("text"), minWords, minKeptLines)
@@ -748,46 +739,15 @@ object TextOps {
     * document, and the fraction of characters contained in such lines
     * (ALL copies count — a 3x-repeated boilerplate line contributes all
     * three). Drop thresholds follow the paper: dup_line_frac > 0.30 or
-    * dup_char_frac > 0.20. Entirely row-local (no explode, no shuffle);
-    * the per-line occurrence count uses the same quadratic-in-lines HOF
-    * shape as t3's top-token count — lines per document are few, and
-    * nothing leaves the row, so this is map-only at any corpus scale.
+    * dup_char_frac > 0.20. Entirely row-local (no explode, no shuffle):
+    * one codegen'd [[DupLineSignals]] expression whose kernel
+    * ([[QualityKernel.dupLines]]) groups the row's lines by a sort of
+    * (hash, line) keys, linear in the text plus that sort, so it is
+    * map-only at any corpus scale.
     */
   /** Column-level dup-line signals (fields: n_lines, n_dup_lines,
     * dup_line_frac, dup_char_frac, kept). */
-  def dupLineSignals(text: Column): Column = {
-    val lines = split(text, "\n")
-    // one fold over the SORTED line array (the t19/topTokenShare shape:
-    // the lambda touches only its own state + element, so no outer
-    // Column subtree is re-evaluated per element): a line in an
-    // equal-run of length >= 2 is a duplicate; when a run REACHES 2 the
-    // first copy is credited retroactively
-    val folded = aggregate(array_sort(lines),
-      struct(lit("").as("prev"), lit(0).as("run"),
-        lit(0).as("dup_n"), lit(0).as("dup_c"), lit(0).as("tot_c")),
-      (st, l) => {
-        val run = when(l === st.getField("prev"), st.getField("run") + 1)
-          .otherwise(lit(1))
-        val add = when(run === 2, lit(2)).when(run > 2, lit(1)).otherwise(lit(0))
-        struct(l.as("prev"), run.as("run"),
-          (st.getField("dup_n") + add).as("dup_n"),
-          (st.getField("dup_c") + add * length(l)).as("dup_c"),
-          (st.getField("tot_c") + length(l)).as("tot_c"))
-      })
-    val nL = size(lines)
-    val dupN = folded.getField("dup_n")
-    val dupFrac = when(nL > 0,
-      round(dupN.cast("double") / nL, 4)).otherwise(0.0)
-    val charFrac = when(folded.getField("tot_c") > 0,
-      round(folded.getField("dup_c").cast("double") / folded.getField("tot_c"), 4))
-      .otherwise(0.0)
-    struct(
-      nL.as("n_lines"),
-      dupN.as("n_dup_lines"),
-      dupFrac.as("dup_line_frac"),
-      charFrac.as("dup_char_frac"),
-      (dupFrac <= 0.30 && charFrac <= 0.20).as("kept"))
-  }
+  def dupLineSignals(text: Column): Column = native(DupLineSignals(_))(text)
 
   def gopherDupLines(df: DataFrame): DataFrame = {
     val s = dupLineSignals(col("text"))
@@ -805,40 +765,21 @@ object TextOps {
     * ratio <= 0.1 ('#' words or '...'-bearing words), bullet-started
     * line fraction <= 0.9, ellipsis-ended line fraction <= 0.3,
     * alphabetic-word fraction >= 0.8, and >= 2 hits from the paper's
-    * 8-stopword list. Every signal is row-local (word/line arrays +
-    * HOF filters, no explode, no shuffle); `kept` compares the ROUNDED
-    * ratios so the oracle's replay agrees at rule boundaries.
+    * 8-stopword list. Every signal is row-local (no explode, no
+    * shuffle): one codegen'd [[GopherSignals]] expression whose kernel
+    * ([[QualityKernel.gopher]]) counts words and lines in one pass over
+    * the text; `kept` compares the ROUNDED ratios so the oracle's replay
+    * agrees at rule boundaries.
     */
   /** Column-level Gopher battery signals (fields: n_words, mean_wlen,
     * sym_frac, bullet_frac, ellipsis_frac, alpha_frac, n_stop, kept). */
   def gopherQualitySignals(text: Column,
-      minWords: Int = 15, maxWords: Int = 90): Column = {
-    val words = split(text, "[ \n]+")
-    val lines = split(text, "\n")
-    val nW = size(words)
-    val nL = size(lines)
-    val wChars = aggregate(words, lit(0), (a, w) => a + length(w))
-    val nSym = size(filter(words, w => w === "#" || w.contains("...")))
-    val nBullet = size(filter(lines, l => l.startsWith("- ")))
-    val nEll = size(filter(lines, l => l.endsWith("...")))
-    val nAlpha = size(filter(words, w => w.rlike("[a-zA-Z]")))
-    val nStop = size(filter(words, w =>
-      w.isin("the", "be", "to", "of", "and", "that", "have", "with")))
-    def frac(n: Column, d: Column) = round(n.cast("double") / d, 4)
-    val meanW = frac(wChars, nW)
-    val symF = frac(nSym, nW)
-    val bulF = frac(nBullet, nL)
-    val ellF = frac(nEll, nL)
-    val alpF = frac(nAlpha, nW)
-    struct(
-      nW.as("n_words"), meanW.as("mean_wlen"), symF.as("sym_frac"),
-      bulF.as("bullet_frac"), ellF.as("ellipsis_frac"),
-      alpF.as("alpha_frac"), nStop.as("n_stop"),
-      (nW >= minWords && nW <= maxWords &&
-        meanW >= 3.0 && meanW <= 10.0 && symF <= 0.1 &&
-        bulF <= 0.9 && ellF <= 0.3 && alpF >= 0.8 && nStop >= 2)
-        .as("kept"))
-  }
+      minWords: Int = 15, maxWords: Int = 90): Column =
+    native(GopherSignals(_, minWords, maxWords))(text)
+
+  /** `text` wrapped in a native quality-signal expression. */
+  private def native(signals: Expression => QualitySignals)(text: Column): Column =
+    ExpressionColumns.column(signals(ExpressionColumns.expression(text)))
 
   def gopherQualityRules(df: DataFrame,
       minWords: Int = 15, maxWords: Int = 90): DataFrame = {

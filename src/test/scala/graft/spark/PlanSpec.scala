@@ -270,6 +270,45 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains(", , -1)"), p.linesIterator.filter(_.contains("split")).mkString("\n"))
   }
 
+  test("quality funnel: p5 and a curate-shaped funnel run no lambda, signals fused in codegen") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.functions._
+    import graft.spark.ops.{QualitySignals, TextOps}
+    val p5 = graft.SparkEntry.queries("p5_quality_funnel")(spark, sf)
+    // perfbench's curate funnel: Catalyst pushes the second filter below
+    // the projection, inlining clean_text, so the C4 kernel runs up to 4
+    // times per surviving row (3 in the filter, 1 in the projection);
+    // p5's single projection runs it once (subexpression elimination)
+    val c4 = TextOps.c4Signals(col("text"))
+    val step1 = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"), lit(null).cast("string").as("error"))
+      .where(col("error").isNull)
+      .select(col("doc_id"), c4.getField("clean_text").as("clean_text"),
+        c4.getField("kept").as("kept_c4"))
+    val gq = TextOps.gopherQualitySignals(col("clean_text"))
+    val dl = TextOps.dupLineSignals(col("clean_text"))
+    val funnel = step1.where(col("kept_c4") && gq.getField("kept") && dl.getField("kept"))
+      .select(col("doc_id"), col("clean_text").as("text"))
+    def signals(e: Expression) = e.isInstanceOf[QualitySignals]
+    for ((name, df) <- Seq[(String, DataFrame)]("p5" -> p5, "curate funnel" -> funnel)) {
+      val lambdas = df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case l: LambdaFunction => l }))
+      assert(lambdas.isEmpty, s"$name: ${lambdas.mkString(", ")}")
+      df.collect() // finalizes the adaptive plan
+      val all = nodes(df.queryExecution.executedPlan)
+      val holders = all.filter {
+        case p: ProjectExec => p.projectList.exists(_.exists(signals))
+        case f: FilterExec => f.condition.exists(signals)
+        case _ => false
+      }
+      val stages = all.collect { case w: WholeStageCodegenExec => fused(w) }
+      assert(holders.nonEmpty && holders.forall(h => stages.exists(_.exists(_ eq h))),
+        s"$name: quality signals outside whole-stage codegen\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("t5 domain quota ranks without a window operator (two-phase top-k)") {
     val df = graft.SparkEntry.queries("t5_domain_quota")(spark, sf)
     df.collect()
