@@ -710,11 +710,6 @@ final class Rewriter(
     */
   private[graft] var disableAttrSkip = false
 
-  /** Test hook: force the framed VM stack even for entry-only programs
-    * (frameless-mode equivalence tests pin both paths byte-identical).
-    */
-  private[graft] def disableFramelessVm(): Unit = vm.disableFrameless = true
-
   // ---- per-document state ----
   private var input: Array[Byte] = _
   private var pendingStart = 0

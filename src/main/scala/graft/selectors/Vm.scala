@@ -218,256 +218,6 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     */
   private val fastEntry: FastEntryTable = FastEntryTable.build(program)
 
-  // ---- frameless mode (entry-only programs) --------------------------------
-  // When the program has NO continuation edges (every selector is a single
-  // compound — the extraction default: a flat strip list), the open-element
-  // stack degenerates: frames carry no jumps, no hereditary edges, no
-  // nth counters, and a descriptor only when matched. The per-tag frame
-  // fill + drain is replaced by (a) per-NAME depth stacks (push = one
-  // memoized probe + one int append; end tag = pop the innermost live
-  // depth), and (b) a small stack of matched elements only, drained by
-  // depth on pops. Implicitly-closed elements of OTHER names are never
-  // walked at all — their stack entries go stale (depth >= current depth)
-  // and are discarded lazily on the next touch of that name.
-  /** Nth predicates read per-parent child counters that only the framed
-    * stack maintains — they disqualify frameless mode.
-    */
-  private def usesNth(s: SimpleSel): Boolean = s match {
-    case _: NthSel => true
-    case NotSel(inner) => inner.exists(usesNth)
-    case _ => false
-  }
-  private val entryOnly: Boolean = {
-    var ok = true
-    var i = 0
-    while (ok && i < program.instrs.length) {
-      val in = program.instrs(i)
-      ok = in.jumps.length == 0 && in.hereditary.length == 0 &&
-        !in.simples.exists(usesNth)
-      i += 1
-    }
-    ok
-  }
-  /** Test hook: force the framed stack even for entry-only programs. */
-  private[graft] var disableFrameless = false
-  private var frameless = false // decided per document in reset()
-
-  // Every open element gets a monotonically increasing sequence id (never
-  // reset across documents), and depthSeq(d) records the seq of the
-  // element CURRENTLY open at depth d. A stack entry (depth, seq) is live
-  // iff depth < flDepth && depthSeq(depth) == seq — implicit closes and
-  // cross-document leftovers both fail one of the two checks, because
-  // re-opening any depth overwrites depthSeq with a strictly larger seq.
-  // Staleness is suffix-closed within one name's stack (closing an element
-  // closes everything deeper), so push-time trimming keeps stacks at live
-  // size and reset() is O(1).
-  private var flSeq = 0
-  private var depthSeq = new Array[Int](64)
-  // per-depth caches for the innermost-close fast path: the open element's
-  // name hash (0 for unhashable names) and its table slot at push time
-  // (re-pointed on grow). A well-formed end tag closes the innermost
-  // element: one compare + two stack decrements, no table probe.
-  private var depthKey = new Array[Long](64)
-  private var depthSlot = new Array[Int](64)
-  // hashable names: tag-hash -> (depth, seq) stacks (ascending)
-  private var flKeys = new Array[Long](64)
-  private var flDepthsT = new Array[graft.core.IntBuf](64)
-  private var flSeqsT = new Array[graft.core.IntBuf](64)
-  private var flUsed = 0
-  // 8-entry direct-mapped key->slot memo: documents alternate among a
-  // handful of names (div/span/emu-*), which a 1-entry memo misses; each
-  // hit is validated against the live table so a stale entry can never
-  // alias another key's slot
-  private val flMemoK = new Array[Long](32)
-  private val flMemoS = new Array[Int](32)
-  // unhashable names: FNV -> (depth, seq, nameStart, nameEnd) stacks; the
-  // name range backs the exact slice compare that guards FNV collisions
-  private var fuKeys = new Array[Long](32)
-  private var fuDepthsT = new Array[graft.core.IntBuf](32)
-  private var fuSeqsT = new Array[graft.core.IntBuf](32)
-  private var fuStarts = new Array[graft.core.IntBuf](32)
-  private var fuEnds = new Array[graft.core.IntBuf](32)
-  private var fuUsed = 0
-  private val fuMemoK = new Array[Long](32)
-  private val fuMemoS = new Array[Int](32)
-  private var flDepth = 0
-  // matched elements only: depth + descriptor, ascending depths, drained
-  // eagerly on every pop (never holds stale entries)
-  private var mDepths = new Array[Int](16)
-  private var mDescs = new Array[ElementDescriptor](16)
-  private var mTop = -1
-
-  @inline private def entryLive(depth: Int, seq: Int): Boolean =
-    depth < flDepth && depthSeq(depth) == seq
-
-  @inline private def flSlotOf(key: Long): Int = {
-    val mask = flKeys.length - 1
-    var i = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
-    while (flKeys(i) != 0L && flKeys(i) != key) i = (i + 1) & mask
-    i
-  }
-  /** Memoized slot lookup for PRESENT-or-to-insert keys: one direct-mapped
-    * probe validated against the table (a hit is only trusted when the
-    * slot still holds the key, so later inserts can never be aliased).
-    */
-  @inline private def flSlotMemo(key: Long): Int = {
-    val m = ((key * 0x9e3779b97f4a7c15L) >>> 59).toInt
-    val s = flMemoS(m)
-    if (flMemoK(m) == key && flKeys(s) == key) s
-    else {
-      val i = flSlotOf(key)
-      if (flKeys(i) == key) { flMemoK(m) = key; flMemoS(m) = i }
-      i
-    }
-  }
-  private def flPush(key: Long): Unit = {
-    var i = flSlotMemo(key)
-    if (flKeys(i) == 0L) {
-      flKeys(i) = key
-      if (flDepthsT(i) == null) {
-        flDepthsT(i) = new graft.core.IntBuf(8)
-        flSeqsT(i) = new graft.core.IntBuf(8)
-      }
-      flUsed += 1
-      if (flUsed * 3 > flKeys.length) { flGrow(); i = flSlotOf(key) }
-      val m = ((key * 0x9e3779b97f4a7c15L) >>> 59).toInt
-      flMemoK(m) = key; flMemoS(m) = i
-    }
-    val dep = flDepthsT(i); val seq = flSeqsT(i)
-    // trim the stale suffix so stacks stay at live size across documents
-    var n = dep.length
-    while (n > 0 && !entryLive(dep(n - 1), seq(n - 1))) n -= 1
-    dep.length = n; seq.length = n
-    dep += flDepth
-    seq += flSeq
-    depthKey(flDepth) = key
-    depthSlot(flDepth) = i
-  }
-  private def flGrow(): Unit = {
-    val ok = flKeys; val od = flDepthsT; val os = flSeqsT
-    flKeys = new Array[Long](ok.length * 2)
-    flDepthsT = new Array[graft.core.IntBuf](od.length * 2)
-    flSeqsT = new Array[graft.core.IntBuf](os.length * 2)
-    var j = 0
-    while (j < ok.length) {
-      if (ok(j) != 0L) {
-        val i = flSlotOf(ok(j))
-        flKeys(i) = ok(j); flDepthsT(i) = od(j); flSeqsT(i) = os(j)
-      }
-      j += 1
-    }
-    java.util.Arrays.fill(flMemoK, 0L)
-    // re-point the fast-pop slot cache of live depths at the rebuilt table
-    j = 0
-    while (j < flDepth) {
-      if (depthKey(j) != 0L) depthSlot(j) = flSlotOf(depthKey(j))
-      j += 1
-    }
-  }
-  @inline private def fuSlotOf(key: Long): Int = {
-    val mask = fuKeys.length - 1
-    var i = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
-    while (fuKeys(i) != 0L && fuKeys(i) != key) i = (i + 1) & mask
-    i
-  }
-  @inline private def fuSlotMemo(key: Long): Int = {
-    val m = ((key * 0x9e3779b97f4a7c15L) >>> 59).toInt
-    val s = fuMemoS(m)
-    if (fuMemoK(m) == key && fuKeys(s) == key) s
-    else {
-      val i = fuSlotOf(key)
-      if (fuKeys(i) == key) { fuMemoK(m) = key; fuMemoS(m) = i }
-      i
-    }
-  }
-  private def fuPush(key: Long, nameStart: Int, nameEnd: Int): Unit = {
-    var i = fuSlotMemo(key)
-    if (fuKeys(i) == 0L) {
-      fuKeys(i) = key
-      if (fuDepthsT(i) == null) {
-        fuDepthsT(i) = new graft.core.IntBuf(4)
-        fuSeqsT(i) = new graft.core.IntBuf(4)
-        fuStarts(i) = new graft.core.IntBuf(4)
-        fuEnds(i) = new graft.core.IntBuf(4)
-      }
-      fuUsed += 1
-      if (fuUsed * 3 > fuKeys.length) { fuGrow(); i = fuSlotOf(key) }
-      val m = ((key * 0x9e3779b97f4a7c15L) >>> 59).toInt
-      fuMemoK(m) = key; fuMemoS(m) = i
-    }
-    val dep = fuDepthsT(i); val seq = fuSeqsT(i)
-    val sts = fuStarts(i); val ens = fuEnds(i)
-    var n = dep.length
-    while (n > 0 && !entryLive(dep(n - 1), seq(n - 1))) n -= 1
-    dep.length = n; seq.length = n; sts.length = n; ens.length = n
-    dep += flDepth
-    seq += flSeq
-    sts += nameStart
-    ens += nameEnd
-    depthKey(flDepth) = 0L // unhashable: innermost-close fast path disabled
-  }
-  private def fuGrow(): Unit = {
-    val ok = fuKeys; val od = fuDepthsT; val oq = fuSeqsT
-    val os = fuStarts; val oe = fuEnds
-    fuKeys = new Array[Long](ok.length * 2)
-    fuDepthsT = new Array[graft.core.IntBuf](od.length * 2)
-    fuSeqsT = new Array[graft.core.IntBuf](oq.length * 2)
-    fuStarts = new Array[graft.core.IntBuf](os.length * 2)
-    fuEnds = new Array[graft.core.IntBuf](oe.length * 2)
-    var j = 0
-    while (j < ok.length) {
-      if (ok(j) != 0L) {
-        val i = fuSlotOf(ok(j))
-        fuKeys(i) = ok(j); fuDepthsT(i) = od(j); fuSeqsT(i) = oq(j)
-        fuStarts(i) = os(j); fuEnds(i) = oe(j)
-      }
-      j += 1
-    }
-    java.util.Arrays.fill(fuMemoK, 0L)
-  }
-  /** Rare full clear: seq headroom exhausted (2^31 minus one max-size doc);
-    * resets every stack so seq ids can restart from 0.
-    */
-  private def flHardReset(): Unit = {
-    java.util.Arrays.fill(flKeys, 0L)
-    java.util.Arrays.fill(fuKeys, 0L)
-    var j = 0
-    while (j < flDepthsT.length) {
-      if (flDepthsT(j) != null) { flDepthsT(j).length = 0; flSeqsT(j).length = 0 }
-      j += 1
-    }
-    j = 0
-    while (j < fuDepthsT.length) {
-      if (fuDepthsT(j) != null) {
-        fuDepthsT(j).length = 0; fuSeqsT(j).length = 0
-        fuStarts(j).length = 0; fuEnds(j).length = 0
-      }
-      j += 1
-    }
-    java.util.Arrays.fill(depthSeq, 0)
-    java.util.Arrays.fill(depthKey, 0L)
-    flUsed = 0; fuUsed = 0
-    java.util.Arrays.fill(flMemoK, 0L)
-    java.util.Arrays.fill(fuMemoK, 0L)
-    flSeq = 0
-  }
-
-  /** Fire matched-element pops for every element at depth >= d, outermost
-    * first (the framed drain order), and truncate the matched stack.
-    */
-  private def drainMatched(d: Int, sink: PopSink): Unit = {
-    var lo = mTop
-    while (lo >= 0 && mDepths(lo) >= d) lo -= 1
-    var j = lo + 1
-    while (j <= mTop) {
-      val desc = mDescs(j)
-      mDescs(j) = null
-      if (desc != null) sink.onPop(desc)
-      j += 1
-    }
-    mTop = lo
-  }
-
   /** ESI tags are void elements when enabled (reference
     * selectors_vm/stack.rs:13-41: esi:include / esi:comment).
     */
@@ -476,155 +226,6 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
       (enableEsiTags && view.nameHash == TagHash.Empty &&
         (graft.core.HtmlUtil.eqIgnoreCase(view.nameInput, view.nameStartV, view.nameEndV, "esi:include") ||
          graft.core.HtmlUtil.eqIgnoreCase(view.nameInput, view.nameStartV, view.nameEndV, "esi:comment"))))
-
-  private def execStartTagFrameless(view: VmElemView, selfClosing: Boolean,
-                                    sink: MatchSink): Boolean = {
-    val isVoid = isVoidElement(view)
-    val withContent = if (view.isHtmlNs) !isVoid else !selfClosing
-    var matched = false
-    if (fastEntry != null) {
-      val idx = fastEntry.get(view.nameHash, view)
-      if (idx >= 0) {
-        val in = program.instrs(idx)
-        var i = 0
-        while (i < in.matchedIds.length) { sink.onMatch(in.matchedIds(i), withContent); i += 1 }
-        matched = true
-      }
-    } else {
-      // entry-only with universal/attr/class predicates: evaluate the
-      // anchor-less entries plus this name's bucket. The two sets are
-      // disjoint so every INSTR is visited at most once, but one match ID
-      // can sit on several entry instrs (a comma list "div, .note" puts
-      // the same handler id on two compounds) — dedup ids and fire in
-      // ascending order exactly like the framed path, or a <div
-      // class=note> would fire its handler id twice.
-      // entryMask is a FIELD, not a captured local: a nested def mutating
-      // a local var makes scalac box it into a per-call LongRef (no
-      // -opt inliner in this build), and this path runs once per tag
-      if (smallProgram) {
-        entryMask = 0L
-        var i = 0
-        if (nameEntry != null) {
-          val u = nameEntry.universal
-          while (i < u.length) { tryEntryInstr(u(i), view); i += 1 }
-          val b = nameEntry.bucketFor(view.nameHash, view)
-          if (b != null) { i = 0; while (i < b.length) { tryEntryInstr(b(i), view); i += 1 } }
-        } else {
-          val ep = program.entryPoints
-          while (i < ep.length) { tryEntryInstr(ep(i), view); i += 1 }
-        }
-        matched = entryMask != 0L
-        var m = entryMask
-        while (m != 0L) {
-          sink.onMatch(java.lang.Long.numberOfTrailingZeros(m), withContent)
-          m &= m - 1
-        }
-      } else {
-        matchedIds.clear()
-        @inline def tryInstr(idx: Int): Unit = {
-          val in = program.instrs(idx)
-          if (in.eval(view)) {
-            var i = 0
-            while (i < in.matchedIds.length) { matchedIds.set(in.matchedIds(i)); i += 1 }
-          }
-        }
-        var i = 0
-        if (nameEntry != null) {
-          val u = nameEntry.universal
-          while (i < u.length) { tryInstr(u(i)); i += 1 }
-          val b = nameEntry.bucketFor(view.nameHash, view)
-          if (b != null) { i = 0; while (i < b.length) { tryInstr(b(i)); i += 1 } }
-        } else {
-          val ep = program.entryPoints
-          while (i < ep.length) { tryInstr(ep(i)); i += 1 }
-        }
-        var id = matchedIds.nextSetBit(0)
-        while (id >= 0) {
-          matched = true
-          sink.onMatch(id, withContent)
-          id = matchedIds.nextSetBit(id + 1)
-        }
-      }
-    }
-    if (withContent) {
-      if (flDepth == depthSeq.length) {
-        depthSeq = java.util.Arrays.copyOf(depthSeq, flDepth * 2)
-        depthKey = java.util.Arrays.copyOf(depthKey, flDepth * 2)
-        depthSlot = java.util.Arrays.copyOf(depthSlot, flDepth * 2)
-      }
-      val h = view.nameHash
-      if (h != TagHash.Empty) flPush(h)
-      else fuPush(normFnv(view.nameFnv), view.nameStartV, view.nameEndV)
-      if (matched) {
-        mTop += 1
-        if (mTop == mDepths.length) {
-          mDepths = java.util.Arrays.copyOf(mDepths, mTop * 2)
-          mDescs = java.util.Arrays.copyOf(mDescs, mTop * 2)
-        }
-        mDepths(mTop) = flDepth
-        mDescs(mTop) = null
-      }
-      depthSeq(flDepth) = flSeq
-      flSeq += 1
-      flDepth += 1
-    }
-    withContent
-  }
-
-  private def execEndTagFrameless(input: Array[Byte], nameStart: Int, nameEnd: Int,
-                                  nameHash: Long, nameFnv: Long, sink: PopSink): Unit = {
-    // fast path: well-formed content closes the innermost element — one
-    // compare via the per-depth key cache, no table probe. The blind stack
-    // decrement is sound: it may remove a stale same-name entry instead of
-    // this element's own, but every entry at depth >= dTop is dead after
-    // the pop anyway (flDepth = dTop), and entries below are untouched.
-    val dTop = flDepth - 1
-    if (dTop >= 0 && nameHash != TagHash.Empty && depthKey(dTop) == nameHash) {
-      val i = depthSlot(dTop)
-      flDepthsT(i).length -= 1
-      flSeqsT(i).length -= 1
-      if (mTop >= 0 && mDepths(mTop) == dTop) {
-        val desc = mDescs(mTop)
-        mDescs(mTop) = null
-        mTop -= 1
-        if (desc != null) sink.onPop(desc)
-      }
-      flDepth = dTop
-      return
-    }
-    if (nameHash != TagHash.Empty) {
-      val i = flSlotOf(nameHash)
-      if (flKeys(i) != nameHash) return
-      val dep = flDepthsT(i); val seq = flSeqsT(i)
-      val darr = dep.raw; val qarr = seq.raw
-      var n = dep.length
-      // discard the implicitly-closed (stale) suffix
-      while (n > 0 && !entryLive(darr(n - 1), qarr(n - 1))) n -= 1
-      if (n == 0) { dep.length = 0; seq.length = 0; return } // stray end tag
-      val d = darr(n - 1)
-      dep.length = n - 1; seq.length = n - 1
-      drainMatched(d, sink)
-      flDepth = d
-    } else {
-      val fnv = normFnv(nameFnv)
-      val i = fuSlotOf(fnv)
-      if (fuKeys(i) != fnv) return
-      val dep = fuDepthsT(i); val seq = fuSeqsT(i)
-      val sts = fuStarts(i); val ens = fuEnds(i)
-      val darr = dep.raw; val qarr = seq.raw
-      var n = dep.length
-      while (n > 0 && !entryLive(darr(n - 1), qarr(n - 1))) n -= 1
-      // exact-name scan (FNV collision guard): the innermost live entry
-      // whose recorded name bytes equal this end tag's name
-      var k = n - 1
-      while (k >= 0 && !eqSliceIgnoreCase(input, sts.raw(k), ens.raw(k), nameStart, nameEnd)) k -= 1
-      if (k < 0) { dep.length = n; seq.length = n; sts.length = n; ens.length = n; return }
-      val d = darr(k)
-      dep.length = k; seq.length = k; sts.length = k; ens.length = k
-      drainMatched(d, sink)
-      flDepth = d
-    }
-  }
 
   /** Entry dispatch index (used when the single-instruction fast table
     * doesn't apply): entry instructions bucketed by their TypeSel anchor,
@@ -646,27 +247,13 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
   private val jumpBuf = new mutable.ArrayBuffer[Int](8)
   private val heredBuf = new mutable.ArrayBuffer[Int](8)
 
-  // per-tag scratch masks as FIELDS: the frameless/framed small-program
-  // entry sweeps would otherwise capture mutable locals in their helper,
-  // which scalac (without the -opt inliner) boxes into a fresh
-  // LongRef allocation per start tag
-  private var entryMask = 0L
+  // per-tag scratch masks as FIELDS: the small-program entry sweep would
+  // otherwise capture mutable locals in its helper, which scalac (without
+  // the -opt inliner) boxes into a fresh LongRef allocation per start tag
   private var visitedMaskF = 0L
   private var matchedMaskF = 0L
 
-  /** Evaluate one entry instruction and fold its match ids into
-    * [[entryMask]] (frameless small-program path; no jumps/hereditary —
-    * entry-only programs have none).
-    */
-  private def tryEntryInstr(idx: Int, view: VmElemView): Unit = {
-    val in = program.instrs(idx)
-    if (in.eval(view)) {
-      var i = 0
-      while (i < in.matchedIds.length) { entryMask |= 1L << in.matchedIds(i); i += 1 }
-    }
-  }
-
-  /** Evaluate one instruction for the framed small-program path: dedup
+  /** Evaluate one instruction for the small-program path: dedup
     * via [[visitedMaskF]], fold match ids into [[matchedMaskF]], queue
     * jumps/hereditary continuations.
     */
@@ -687,21 +274,6 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
   }
 
   def reset(): Unit = {
-    frameless = entryOnly && !disableFrameless
-    if (frameless) {
-      // O(1): leftover stack entries go stale via the (depth, seq)
-      // liveness check; seq ids are never reused until a hard reset
-      flDepth = 0
-      var j = 0
-      while (j <= mTop) { mDescs(j) = null; j += 1 }
-      mTop = -1
-      // 2^30 headroom: one document can never push that many elements
-      // (each start tag spans >= 3 input bytes and the input is an
-      // Array[Byte] of < 2^31 bytes), so checking only between documents
-      // can never let flSeq overflow mid-parse
-      if (flSeq > Int.MaxValue - (1 << 30)) flHardReset()
-      return
-    }
     top = -1
     rootChildCount = 0
     rootTypedCounters = null
@@ -720,27 +292,19 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     lastFnvKey = 0L
   }
 
-  def depth: Int = if (frameless) flDepth else top + 1
+  def depth: Int = top + 1
 
   /** Descriptor of the innermost open element, or null. */
-  def currentDescriptor: ElementDescriptor =
-    if (frameless) {
-      if (mTop >= 0 && mDepths(mTop) == flDepth - 1) mDescs(mTop) else null
-    } else if (top >= 0) fDesc(top)
-    else null
+  def currentDescriptor: ElementDescriptor = if (top >= 0) fDesc(top) else null
 
   /** Attach a descriptor to the frame pushed by the latest start tag. */
-  def setCurrentDescriptor(d: ElementDescriptor): Unit =
-    if (frameless) {
-      if (mTop >= 0 && mDepths(mTop) == flDepth - 1) mDescs(mTop) = d
-    } else if (top >= 0) fDesc(top) = d
+  def setCurrentDescriptor(d: ElementDescriptor): Unit = if (top >= 0) fDesc(top) = d
 
   /** Run matching for a start tag. `view.nthIdx`/`nthOfTypeIdx` are filled
     * here. Returns true if a frame was pushed (element can have content).
     */
   def execStartTag(view: VmElemView, selfClosing: Boolean,
                    sink: MatchSink): Boolean = {
-    if (frameless) return execStartTagFrameless(view, selfClosing, sink)
     // add_child on parent (view.nameLower is fetched lazily — it may
     // intern; only the nth-of-type counters need it here)
     if (top >= 0) {
@@ -964,7 +528,6 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     */
   def execEndTag(input: Array[Byte], nameStart: Int, nameEnd: Int,
                  nameHash: Long, nameFnv: Long, sink: PopSink): Unit = {
-    if (frameless) { execEndTagFrameless(input, nameStart, nameEnd, nameHash, nameFnv, sink); return }
     val fnv = normFnv(nameFnv)
     @inline def matches(j: Int): Boolean =
       if (nameHash != TagHash.Empty) fNameHash(j) == nameHash

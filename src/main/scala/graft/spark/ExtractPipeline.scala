@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumns
 import graft.extract._
 
 /** Row model of the interleaved-documents table (BASELINE.json input_hint):
@@ -154,14 +155,9 @@ object ExtractPipeline {
     */
   def extractDF(df: DataFrame,
                 policy: ExtractPolicy = ExtractPolicy.Default): DataFrame = {
-    // register a policy-bound variant of the expression (the function
-    // registry is the public seam for Column-from-Expression)
-    val fnName =
-      if (policy == ExtractPolicy.Default) "extract_interleaved"
-      else f"extract_interleaved_${policy.hashCode & 0x7fffffff}%x"
-    df.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => ExtractInterleaved(exprs.head, policy), "scala_udf")
-    df.withColumn("_x", call_function(fnName, col("spans")))
+    val x = ExpressionColumns.column(
+      ExtractInterleaved(ExpressionColumns.expression(col("spans")), policy))
+    df.withColumn("_x", x)
       .withColumn("spans", col("_x.spans"))
       .withColumn("error", col("_x.error"))
       .drop("_x")

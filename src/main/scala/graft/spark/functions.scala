@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ExpressionColumns
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -102,9 +103,9 @@ object ExtractSpans {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "extract_spans", exprs => ExtractSpans(exprs.head), "scala_udf")
 
-  /** Column surface (requires [[register]] once per session). */
+  /** Column surface; needs no registration. */
   def extract_spans(html: Column): Column =
-    org.apache.spark.sql.functions.call_function("extract_spans", html)
+    ExpressionColumns.column(ExtractSpans(ExpressionColumns.expression(html)))
 }
 
 /** The whole-pipeline expression: interleaved input span array in,
@@ -126,8 +127,8 @@ case class ExtractInterleaved(child: Expression,
 
   // field ordinals resolved BY NAME from the child's physical struct:
   // external parquet may order the span struct differently (e.g.
-  // alphabetized), and .as[] / call_function resolve by name without
-  // reordering the physical layout
+  // alphabetized), and .as[] resolves by name without reordering the
+  // physical layout
   @transient private lazy val (kindOrd, textOrd, refOrd, numFields) =
     child.dataType match {
       case ArrayType(st: StructType, _) =>

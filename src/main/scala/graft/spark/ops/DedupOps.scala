@@ -3,7 +3,10 @@ package graft.spark.ops
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumns
 import graft.spark.BucketLedger
 
 /** Deduplication operators for the training-data pipeline: exact
@@ -160,7 +163,9 @@ object DedupOps {
     val bloom = evalGramBloom(benchmark, n, estItems, numBits)
     val probed = grams(corpus)
       .select(col("doc_id"), explode(col("grams")).as("g"))
-      .withColumn("bh", call_function("graft_bloom_might", lit(bloom), xxhash64(col("g"))))
+      .withColumn("bh", ExpressionColumns.column(BloomFilterMightContain(
+        ExpressionColumns.expression(lit(bloom)),
+        ExpressionColumns.expression(xxhash64(col("g"))))))
       .join(broadcast(bGrams.withColumn("ex", lit(true))), Seq("g"), "left")
       .groupBy(col("doc_id"))
       .agg(max(coalesce(col("ex"), lit(false))).as("ex"), max(col("bh")).as("bh"))
@@ -180,25 +185,16 @@ object DedupOps {
   def evalGramBloom(benchmark: DataFrame, n: Int,
       estItems: Long, numBits: Long): Array[Byte] = {
     val spark = benchmark.sparkSession
-    registerBloom(spark)
     import spark.implicits._
     benchmark.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(_.map { case (_, t) => ngramSet(t, n) })
       .toDF("grams")
       .select(explode(col("grams")).as("g")).distinct()
       .select(xxhash64(col("g")).as("h"))
-      .agg(expr(s"graft_bloom_agg(h, ${estItems}L, ${numBits}L)"))
+      .agg(ExpressionColumns.column(new BloomFilterAggregate(
+        ExpressionColumns.expression(col("h")), Literal(estItems), Literal(numBits))
+        .toAggregateExpression()))
       .head().getAs[Array[Byte]](0)
-  }
-
-  private def registerBloom(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bloom_might",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
   }
 
   // ---- session memos (see SessionMemo for keys, bound and release) ----
@@ -314,29 +310,6 @@ object DedupOps {
     }
   }
 
-  /** d12: SUBSTRING-level span dedup (Lee et al., "Deduplicating
-    * Training Data Makes Language Models Better"): find every token
-    * position whose `k`-gram occurs more than once ANYWHERE in the
-    * corpus (other documents or elsewhere in the same one), and merge
-    * the hit positions into maximal duplicated spans per document —
-    * the operator that doc-level dedup (d1/d2/d3) cannot express:
-    * boilerplate paragraphs inside otherwise-unique pages.
-    *
-    * Plan shape (one corpus scan, two shuffles, no self-join, no cache):
-    * positional k-grams are generated row-locally in `mapPartitions`
-    * (Catalyst higher-order lambdas are interpreted — the same reason
-    * [[ngramSet]] exists) and exchanged as xxhash64 keys (8 bytes, not
-    * ~80-byte gram strings; a 64-bit collision marks a false duplicate
-    * span — negligible below ~2^30 distinct grams, same trust level as
-    * the d2/d3 shingle keys); duplication is decided by a count window
-    * PARTITIONED BY GRAM (high cardinality — one shuffle and no second
-    * scan of the gram generation, where a join-back against a
-    * `HAVING count>1` aggregate would recompute or cache the lineage);
-    * per-doc sorted positions then fold into merged `[p, p+k)` intervals
-    * with a single `aggregate` expression (adjacent duplicated runs
-    * merge: gap <= k). Returns (doc_id, dup_spans, dup_tokens) for
-    * EVERY corpus document, zeros for clean ones.
-    */
   /** Positional k-grams of one document (1-based positions), shared by
     * the in-memory and staged span-dedup paths.
     */
@@ -373,6 +346,29 @@ object DedupOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
+  /** d12: SUBSTRING-level span dedup (Lee et al., "Deduplicating
+    * Training Data Makes Language Models Better"): find every token
+    * position whose `k`-gram occurs more than once ANYWHERE in the
+    * corpus (other documents or elsewhere in the same one), and merge
+    * the hit positions into maximal duplicated spans per document —
+    * the operator that doc-level dedup (d1/d2/d3) cannot express:
+    * boilerplate paragraphs inside otherwise-unique pages.
+    *
+    * Plan shape (one corpus scan, two shuffles, no self-join, no cache):
+    * positional k-grams are generated row-locally in `mapPartitions`
+    * (Catalyst higher-order lambdas are interpreted — the same reason
+    * [[ngramSet]] exists) and exchanged as xxhash64 keys (8 bytes, not
+    * ~80-byte gram strings; a 64-bit collision marks a false duplicate
+    * span — negligible below ~2^30 distinct grams, same trust level as
+    * the d2/d3 shingle keys); duplication is decided by a count window
+    * PARTITIONED BY GRAM (high cardinality — one shuffle and no second
+    * scan of the gram generation, where a join-back against a
+    * `HAVING count>1` aggregate would recompute or cache the lineage);
+    * per-doc sorted positions then fold into merged `[p, p+k)` intervals
+    * with a single `aggregate` expression (adjacent duplicated runs
+    * merge: gap <= k). Returns (doc_id, dup_spans, dup_tokens) for
+    * EVERY corpus document, zeros for clean ones.
+    */
   def spanDedup(base: DataFrame, k: Int = 13): DataFrame =
     spanDedupFrom(base, posGrams(base, k), k)
 
@@ -627,12 +623,10 @@ object DedupOps {
     * recompute or executor-storage pin).
     */
   def ngramJaccardPairsStaged(spark: SparkSession, dir: String, threshold: Double,
-                              dfCap: Int = DefaultShingleDfCap): DataFrame =
-    ngramJaccardPairsFromShingled(stagedShingles(spark, dir), threshold, dfCap)
-
-  private def ngramJaccardPairsFromShingled(withSh: DataFrame, threshold: Double,
-                                            dfCap: Int): DataFrame =
+                              dfCap: Int = DefaultShingleDfCap): DataFrame = {
+    val withSh = stagedShingles(spark, dir)
     ngramJaccardPairsCore(withSh, rawPostings(withSh), threshold, dfCap)
+  }
 
   /** Core of d2 given a postings table (memoized or freshly built).
     * Keying on xxhash64: a 64-bit collision would need ~2^32 distinct
@@ -748,12 +742,10 @@ object DedupOps {
     */
   def incrementalDupVerdictStaged(spark: SparkSession, dir: String, batch: DataFrame,
                                   threshold: Double,
-                                  dfCap: Int = DefaultShingleDfCap): DataFrame =
-    incrementalDupVerdictFromShingled(stagedShingles(spark, dir), batch, threshold, dfCap)
-
-  private def incrementalDupVerdictFromShingled(corpusSh: DataFrame, batch: DataFrame,
-                                                threshold: Double, dfCap: Int): DataFrame =
+                                  dfCap: Int = DefaultShingleDfCap): DataFrame = {
+    val corpusSh = stagedShingles(spark, dir)
     incrementalDupVerdictCore(corpusSh, rawPostings(corpusSh), batch, threshold, dfCap)
+  }
 
   private def incrementalDupVerdictCore(corpusSh: DataFrame, posts: DataFrame,
                                         batch: DataFrame,

@@ -107,21 +107,6 @@ object TextOps {
 
   def fingerprint(text: Column): Column = md5(encode(text, "UTF-8"))
 
-  /** The per-doc stats frame used by the qX text queries. The rolling
-    * polynomial fingerprint (base 131 mod 1e9+7) runs as the native
-    * codegen'd [[graft.spark.RollingHash]] expression — the interpreted
-    * HOF formulation it replaced (`aggregate(transform(split(text,"")))`)
-    * allocated one single-char String per character;
-    * RollingHashParitySpec pins bit-identical output.
-    */
-  /** Deterministic reproducible train/val/test assignment — the standard
-    * split primitive for training corpora: multiplicative (Knuth) hashing
-    * of the stable doc_id into 1000 buckets, thresholded by cumulative
-    * fractions. Pure integer arithmetic so the assignment is identical in
-    * any engine (the DuckDB oracle replays the same expression), stable
-    * under repartitioning/reruns, and adding documents never reassigns
-    * existing ones. Map-only: no shuffle, no RNG, no sampling drift.
-    */
   /** Shared-arithmetic guard for every Knuth-hash decision below: doc_id
     * is folded to its low 31 bits BEFORE the multiply, so the product fits
     * in a signed 64-bit value in every engine. Without the mask the
@@ -132,15 +117,18 @@ object TextOps {
     */
   private def hid: Column = col("doc_id").bitwiseAND(lit(2147483647L))
 
+  /** Deterministic reproducible train/val/test assignment — the standard
+    * split primitive for training corpora: multiplicative (Knuth) hashing
+    * of the stable doc_id into 1000 buckets, thresholded by cumulative
+    * fractions. Pure integer arithmetic so the assignment is identical in
+    * any engine (the DuckDB oracle replays the same expression), stable
+    * under repartitioning/reruns, and adding documents never reassigns
+    * existing ones. Map-only: no shuffle, no RNG, no sampling drift.
+    */
   def deterministicSplit(df: DataFrame,
                          trainPct: Int = 900, valPct: Int = 50): DataFrame =
     withSplit(df, trainPct, valPct).select("doc_id", "split_bucket", "split")
 
-  /** [[deterministicSplit]] in composition form: appends the split
-    * columns to the input row instead of projecting them out, so
-    * composed pipelines don't need a join-back by doc_id to recover
-    * their other columns.
-    */
   /** The split decision as a pure function of an arbitrary id column —
     * the single source of the t4 arithmetic, so audits that re-derive a
     * document's split from a pair/edge id (t22) can never drift from
@@ -156,6 +144,11 @@ object TextOps {
       .otherwise("test")
   }
 
+  /** [[deterministicSplit]] in composition form: appends the split
+    * columns to the input row instead of projecting them out, so
+    * composed pipelines don't need a join-back by doc_id to recover
+    * their other columns.
+    */
   def withSplit(df: DataFrame, trainPct: Int = 900, valPct: Int = 50): DataFrame =
     df.withColumn("split_bucket", splitBucketOf(col("doc_id")).cast("int"))
       .withColumn("split", splitNameOf(col("doc_id"), trainPct, valPct))
@@ -295,8 +288,14 @@ object TextOps {
       .toDF("doc_id", "n_tok", "tok_offset", "pack_id")
   }
 
+  /** The per-doc stats frame used by the qX text queries. The rolling
+    * polynomial fingerprint (base 131 mod 1e9+7) runs as the native
+    * codegen'd [[graft.spark.RollingHash]] expression — the interpreted
+    * HOF formulation it replaced (`aggregate(transform(split(text,"")))`)
+    * allocated one single-char String per character;
+    * RollingHashParitySpec pins bit-identical output.
+    */
   def docStats(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.spark.RollingHashFn.register(spark)
     val docs = Par.spreadBy(
       spark.read.parquet(s"$sfDir/documents.parquet"), col("doc_id"))
     docs.select(
@@ -307,7 +306,8 @@ object TextOps {
       langId(col("text")).as("lang_pred"),
       qualityScore(col("text")).as("quality"),
       fingerprint(col("text")).as("fp_md5"),
-      expr("rolling_hash(text)").as("fp_roll")
+      ExpressionColumns.column(
+        graft.spark.RollingHash(ExpressionColumns.expression(col("text")))).as("fp_roll")
     )
   }
 

@@ -10,7 +10,10 @@ import scala.jdk.CollectionConverters._
   * answer and then delete, and a `main` in a test file that is not a
   * Spec is a probe harness nothing runs or checks. Also keeps one owner
   * of the resume-ledger format (`BucketLedger`), so a second copy of the
-  * protocol cannot drift from it. Paths resolve against
+  * protocol cannot drift from it, and keeps library code from naming
+  * functions in the caller's session outside the public `register`
+  * methods (a Column builder wraps its native expression directly).
+  * Paths resolve against
   * the working directory, which sbt sets to the project base directory
   * for forked tests.
   */
@@ -39,6 +42,56 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("one module under src/main/scala owns the _ledger files") {
     val owners = scalaFiles("src/main/scala").filter(f => read(f).contains("\"_ledger"))
     assert(owners.size <= 1, owners.mkString("\"_ledger in more than one file:\n", "\n", ""))
+  }
+
+  /** 1-based lines of `src` that call `createOrReplaceTempFunction`
+    * outside the body of a `def register(`. The enclosing definition is
+    * the nearest line above with a smaller indent that opens a `def`;
+    * comment lines are skipped.
+    */
+  private def tempFunctionsOutsideRegister(src: String): Seq[Int] = {
+    val lines = src.split("\n", -1)
+    val defLine = """^\s*(?:(?:private|protected|override|final)(?:\[\w+\])?\s+)*def\s+(\w+)""".r
+    def indent(l: String): Int = l.indexWhere(_ != ' ')
+    def isComment(l: String): Boolean = {
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    def enclosingDef(at: Int): Option[String] = {
+      var bound = indent(lines(at))
+      var i = at - 1
+      while (i >= 0) {
+        val l = lines(i)
+        val ind = indent(l)
+        if (ind >= 0 && ind < bound && !isComment(l)) {
+          defLine.findFirstMatchIn(l) match {
+            case Some(m) => return Some(m.group(1))
+            case None => bound = ind
+          }
+        }
+        i -= 1
+      }
+      None
+    }
+    lines.indices.filter { i =>
+      lines(i).contains("createOrReplaceTempFunction") && !isComment(lines(i)) &&
+        !enclosingDef(i).contains("register")
+    }.map(_ + 1)
+  }
+
+  test("src/main/scala names session functions only inside def register") {
+    val inRegister =
+      "object A {\n  def register(s: S): Unit =\n    r.createOrReplaceTempFunction(\"a\", f)\n}"
+    val elsewhere =
+      "object B {\n  def build(s: S): C = {\n    r.createOrReplaceTempFunction(\"b\", f)\n    c\n  }\n}"
+    assert(tempFunctionsOutsideRegister(inRegister).isEmpty)
+    assert(tempFunctionsOutsideRegister(elsewhere) == Seq(3))
+    val hits = for {
+      f <- scalaFiles("src/main/scala")
+      i <- tempFunctionsOutsideRegister(read(f))
+    } yield s"$f:$i"
+    if (hits.nonEmpty)
+      fail(hits.mkString("createOrReplaceTempFunction outside a def register:\n", "\n", ""))
   }
 
   test("only *Spec.scala files under src/test/scala declare a main") {
