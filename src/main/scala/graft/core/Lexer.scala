@@ -386,16 +386,16 @@ final class Lexer(strict: Boolean = true) extends TagView {
         (treeSim.currentNs == Ns.Html && {
           // unhashable names (custom elements: <emu-*> etc.) memoize on
           // their FNV-64 — already computed above — so attr-need is one
-          // compare per tag on custom-element-dense documents too; the
-          // engine already trusts FNV-64 for name identity (frame name
-          // keys, FastEntryTable by-name dispatch). Bit 63 biases the FNV
-          // key space AWAY from packed TagHash values, but the separation
-          // is probabilistic, not structural: TagHash.update guards
-          // (h >>> 59) == 0 BEFORE the 5-bit shift (reference parity,
-          // tag.rs), so a 13-char dashless name whose first letter is
-          // c..j packs with bit 63 set. A cross-space collision therefore
-          // needs full 64-bit equality — the same (negligible) trust
-          // level as the FNV keys themselves
+          // compare per tag on custom-element-dense documents too
+          // (MatchingVm keys its open-name counts the same way, but only
+          // as a necessary condition: its frames compare names exactly).
+          // Bit 63 biases the FNV key space AWAY from packed TagHash
+          // values, but the separation is probabilistic, not structural:
+          // TagHash.update guards (h >>> 59) == 0 BEFORE the 5-bit shift
+          // (reference parity, tag.rs), so a 13-char dashless name whose
+          // first letter is c..j packs with bit 63 set. A cross-space
+          // collision therefore needs full 64-bit equality — the same
+          // (negligible) trust level as the FNV keys themselves
           val key = if (tNameHash != TagHash.Empty) tNameHash
                     else tNameFnv | Long.MinValue
           val m = ((key * 0x9e3779b97f4a7c15L) >>> 56).toInt

@@ -999,18 +999,16 @@ final class Rewriter(
 
   private object popSink extends PopSink {
     def onPop(desc: ElementDescriptor): Unit = {
-      if (desc != null) {
-        val ids = desc.matchedContentHandlers
-        var i = 0
-        while (i < ids.length) {
-          val id = ids(i)
-          if (locComment(id) >= 0) commentHandlers.dec(locComment(id))
-          if (locText(id) >= 0) textHandlers.dec(locText(id))
-          i += 1
-        }
-        if (desc.endTagHandlerIdx >= 0) endTagHandlers.inc(desc.endTagHandlerIdx)
-        if (desc.removeContent) matchedRemoved -= 1
+      val ids = desc.matchedContentHandlers
+      var i = 0
+      while (i < ids.length) {
+        val id = ids(i)
+        if (locComment(id) >= 0) commentHandlers.dec(locComment(id))
+        if (locText(id) >= 0) textHandlers.dec(locText(id))
+        i += 1
       }
+      if (desc.endTagHandlerIdx >= 0) endTagHandlers.inc(desc.endTagHandlerIdx)
+      if (desc.removeContent) matchedRemoved -= 1
     }
   }
 
@@ -1257,7 +1255,7 @@ final class Rewriter(
       flushPendingText(rawStart)
 
       // no string on this path at all: the VM matches frames by hash, or
-      // by FNV + byte-slice compare for unhashable names; only an actual
+      // by byte-slice compare for unhashable names; only an actual
       // EndTag token (rare) interns on demand below
       vm.execEndTag(input, nameStart, nameEnd, nameHash, lexer.tagNameFnv, popSink)
 

@@ -1,7 +1,6 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -76,12 +75,14 @@ case class ExtractSpans(child: Expression) extends EngineExpression with Seriali
   override def dataType: DataType = ExtractSpans.SpanArrayType
 
   override def run(input: Any, w: EngineWorker): Any = {
-    val html = input.asInstanceOf[UTF8String].getBytes
-    val res = w.engine.extractHtml(html, Vector.empty, Vector.empty)
-    new GenericArrayData(res.spans.map { s =>
-      InternalRow(UTF8String.fromString(s.kind), UTF8String.fromString(s.text),
-        UTF8String.fromString(s.media_ref), s.offset)
-    }.toArray[Any])
+    // a fresh copy: the text spans view this buffer (see spanArray)
+    val doc = input.asInstanceOf[UTF8String]
+    val html = new Array[Byte](doc.numBytes())
+    doc.writeToMemory(html, Platform.BYTE_ARRAY_OFFSET)
+    w.mediaRefs.clear()
+    w.mediaOffsets.clear()
+    ExtractInterleaved.spanArray(
+      w.engine.extractRaw(html, html.length, w.mediaOffsets), html, w.mediaRefs)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -202,21 +203,7 @@ case class ExtractInterleaved(child: Expression,
       i += 1
     }
     val res = w.engine.extractRaw(html, total, mediaOffsets)
-    // zero-copy text spans: UTF8Strings view the per-doc html buffer
-    val out = new Array[Any](res.count)
-    i = 0
-    while (i < res.count) {
-      val start = res.starts(i)
-      out(i) = new GenericInternalRow(
-        if (res.kinds(i) == 0)
-          Array[Any](ExtractInterleaved.TEXT,
-            UTF8String.fromBytes(html, start, res.ends(i) - start), UTF8String.EMPTY_UTF8, start)
-        else
-          Array[Any](ExtractInterleaved.MEDIA, UTF8String.EMPTY_UTF8,
-            mediaRefs(res.mediaIdx(i)), start))
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](new GenericArrayData(out),
+    new GenericInternalRow(Array[Any](ExtractInterleaved.spanArray(res, html, mediaRefs),
       if (res.error == null) null else UTF8String.fromString(res.error)))
   }
 
@@ -245,6 +232,28 @@ object ExtractInterleaved {
 
   private[spark] val TEXT = UTF8String.fromString("text")
   private[spark] val MEDIA = UTF8String.fromString("media")
+
+  /** One extraction's `array<struct<kind,text,media_ref,offset>>`. Text
+    * spans are zero-copy UTF8Strings over `html` (the document's own
+    * bytes, invalid UTF-8 included), so `html` must be a per-row buffer;
+    * media spans take their ref from `mediaRefs`.
+    */
+  private[spark] def spanArray(res: Extractor#RawSpans, html: Array[Byte],
+                               mediaRefs: collection.IndexedSeq[UTF8String]): GenericArrayData = {
+    val out = new Array[Any](res.count)
+    var i = 0
+    while (i < res.count) {
+      val start = res.starts(i)
+      out(i) = new GenericInternalRow(
+        if (res.kinds(i) == 0)
+          Array[Any](TEXT, UTF8String.fromBytes(html, start, res.ends(i) - start),
+            UTF8String.EMPTY_UTF8, start)
+        else
+          Array[Any](MEDIA, UTF8String.EMPTY_UTF8, mediaRefs(res.mediaIdx(i)), start))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
 
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -101,4 +101,13 @@ class SourceHygieneSpec extends AnyFunSuite {
       .filter(f => main.findFirstIn(read(f)).isDefined)
     if (hits.nonEmpty) fail(hits.mkString("probe mains outside a Spec:\n", "\n", ""))
   }
+
+  test("only the allow-listed entry points under src/main/scala declare a main") {
+    val allowed = Set("Bench", "BenchEmitProbe", "BenchExtra", "DumpAst", "ExtractJob", "Verify")
+    val main = """\bdef\s+main\s*\(""".r
+    val hits = scalaFiles("src/main/scala")
+      .filterNot(f => allowed(f.getFileName.toString.stripSuffix(".scala")))
+      .filter(f => main.findFirstIn(read(f)).isDefined)
+    if (hits.nonEmpty) fail(hits.mkString("main outside the entry-point allow-list:\n", "\n", ""))
+  }
 }

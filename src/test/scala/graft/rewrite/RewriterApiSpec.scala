@@ -230,10 +230,10 @@ class EsiTagsSpec extends AnyFunSuite {
 }
 
 /** Entry dispatch via the name-bucketed index: programs whose entries
-  * carry predicates beyond a single TypeSel (so the one-probe fast table
-  * bails) must still fire exactly the right matches — including multiple
-  * entries bucketed under ONE name, anchored unhashable names, and
-  * anchor-less entries that run for every tag.
+  * carry predicates beyond a single TypeSel must still fire exactly the
+  * right matches — including multiple entries bucketed under ONE name,
+  * anchored unhashable names, anchor-less entries that run for every tag,
+  * and programs past one 64-bit word of instructions and match ids.
   */
 class NameEntryDispatchSpec extends org.scalatest.funsuite.AnyFunSuite {
   import scala.collection.mutable
@@ -266,6 +266,21 @@ class NameEntryDispatchSpec extends org.scalatest.funsuite.AnyFunSuite {
     val got = matches("<a href=u>l</a><p href=zz>t</p><b>n</b>",
       Seq("a[href]", "[href]"))
     assert(got == Seq("a[href]:a", "[href]:a", "[href]:p"))
+  }
+
+  test("programs past 64 instructions and match ids: order, dedup and jumps") {
+    // ids 0..67 -> instrs 0..67; id 68 (comma list) -> instrs 68, 69;
+    // id 69 -> `section` at instr 70 with a child jump to `p` at instr 71
+    val divs = (0 until 68).map(n => s"div.c$n")
+    val sels = divs ++ Seq("p.x, p.y", "section > p")
+    val got = matches(
+      """<div class="c67 c0 c64 c63 c5">a</div><p class="y x">b</p>""" +
+        """<section><p class=x>c</p><div><p>d</p></div></section>""",
+      sels)
+    assert(got == Seq(
+      "div.c0:div", "div.c5:div", "div.c63:div", "div.c64:div", "div.c67:div",
+      "p.x, p.y:p",
+      "p.x, p.y:p", "section > p:p"))
   }
 }
 

@@ -1327,6 +1327,20 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaSql(0).getInt(0) == 2)
   }
 
+  test("extract_spans and extract_interleaved return the same span bytes on invalid UTF-8") {
+    import org.apache.spark.sql.functions.{col, expr}
+    // <p>a\xFFb</p>: the text span keeps the document's own bytes
+    val html = spark.range(1).select(expr("cast(unhex('3C703E61FF623C2F703E') as string)").as("html"))
+    def spanBytes(spans: org.apache.spark.sql.DataFrame): Seq[(String, Int)] =
+      spans.selectExpr("inline(spans)").selectExpr("hex(cast(text as binary))", "offset")
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    val viaSpans = spanBytes(html.select(ExtractSpans.extract_spans(col("html")).as("spans")))
+    val viaInterleaved = spanBytes(ExtractPipeline.extractDF(html.selectExpr(
+      "array(named_struct('kind', 'text', 'text', html, 'media_ref', '')) as spans")))
+    assert(viaInterleaved == Seq(("61FF62", 3)))
+    assert(viaSpans == viaInterleaved)
+  }
+
   test("size-balanced extraction spreads giant documents across tasks") {
     val sp = spark
     import sp.implicits._
