@@ -159,20 +159,13 @@ final class Lexer(strict: Boolean = true) extends TagView {
   private var tagIsStart = false
   private var tNameStart, tNameEnd = 0
   private var tNameHash = 0L
-  private var tNameFnv = 0xcbf29ce484222325L
+  private var tNameKey = 0L
   private var tSelfClosing = false
 
-  private var tNameAscii = true
-
-  /** Case-folded FNV-1a of the current tag's name bytes. Valid during a
-    * sink callback for that tag AND only when the tag's 5-bit name hash is
-    * [[TagHash.Empty]] (it is computed lazily at name end for exactly
-    * those names); lets consumers key unhashable names without rehashing.
+  /** [[NameKey]] of the current tag's name, valid during a sink callback
+    * for that tag; consumers key names by it without rehashing.
     */
-  def tagNameFnv: Long = tNameFnv
-
-  /** True iff the current tag's name is pure ASCII (same validity). */
-  def tagNameIsAscii: Boolean = tNameAscii
+  def tagNameKey: Long = tNameKey
   private val attrs = new AttrList
   // current attribute
   private var hasAttr = false
@@ -235,7 +228,7 @@ final class Lexer(strict: Boolean = true) extends TagView {
     // common case — one Rewriter, one program) keeps its warm entries
     // across documents; a different table invalidates them all
     if (attrNeed ne memoNeedTable) {
-      java.util.Arrays.fill(memoNeedHash, 0L)
+      java.util.Arrays.fill(memoNeedKey, 0L)
       memoNeedTable = attrNeed
     }
     nextPos = 0; lexemeStart = 0; tokenPartStart = 0
@@ -324,44 +317,24 @@ final class Lexer(strict: Boolean = true) extends TagView {
 
   private def createStartTag(): Unit = {
     hasTag = true; tagIsStart = true
-    tNameStart = 0; tNameEnd = 0; tNameHash = 0L; tNameFnv = 0xcbf29ce484222325L; tNameAscii = true; tSelfClosing = false
+    tNameStart = 0; tNameEnd = 0; tNameHash = 0L; tNameKey = 0L; tSelfClosing = false
     attrs.clear(); hasAttr = false
   }
 
   private def createEndTag(): Unit = {
     hasTag = true; tagIsStart = false
-    tNameStart = 0; tNameEnd = 0; tNameHash = 0L; tNameFnv = 0xcbf29ce484222325L; tNameAscii = true; tSelfClosing = false
+    tNameStart = 0; tNameEnd = 0; tNameHash = 0L; tNameKey = 0L; tSelfClosing = false
     attrs.clear(); hasAttr = false
   }
 
   @inline private def updateTagNameHash(): Unit =
     if (pos < len) tNameHash = TagHash.update(tNameHash, input(pos))
 
-  /** Case-folded FNV-1a fallback identity + ASCII flag for names the
-    * 5-bit hash can't encode. Computed ONCE at name end and only for
-    * unhashable names (one cache-hot rescan of <=name-length bytes) —
-    * hashable names, the common case, pay nothing per character.
-    */
-  private def computeNameFnv(): Unit = {
-    var f = 0xcbf29ce484222325L
-    var ascii = true
-    var i = tNameStart
-    while (i < tNameEnd) {
-      val b = input(i)
-      if (b < 0) ascii = false
-      val c = if (b >= 'A' && b <= 'Z') b + 32 else b & 0xff
-      f = (f ^ c) * 0x100000001b3L
-      i += 1
-    }
-    tNameFnv = f
-    tNameAscii = ascii
-  }
-
-  // one-entry memo for the scan-mode decision: documents repeat tag names
-  // in runs (<td>, <li>, <emu-alg>...), so the common case is one compare
-  // instead of a table probe (0 is never a real tag hash — names start
-  // with a letter — and never Empty, so it doubles as "invalid")
-  private val memoNeedHash = new Array[Long](256)
+  // direct-mapped memo of the scan-mode decision, by name key: documents
+  // repeat tag names (<td>, <li>, <emu-alg>...), so the common case is
+  // one compare instead of a table probe (0 is never a key, so it doubles
+  // as "invalid")
+  private val memoNeedKey = new Array[Long](256)
   private val memoNeedSkip = new Array[Boolean](256)
   private var memoNeedTable: AttrNeedTable = _
 
@@ -377,32 +350,20 @@ final class Lexer(strict: Boolean = true) extends TagView {
       h = TagHash.update(h, input(i)); i += 1
     }
     tNameHash = h
-    if (tNameHash == TagHash.Empty) computeNameFnv()
+    // unhashable names (custom elements: <emu-*> etc.) pay one cache-hot
+    // rescan here; hashable names, the common case, pay nothing more
+    tNameKey = NameKey.of(h, input, tNameStart, tNameEnd)
     // scan mode: decide attribute recording once per tag. End tags always
     // skip (attrs dropped by spec); foreign content never skips (tree
     // feedback reads <font color/size/face> and <annotation-xml encoding>)
     tSkipAttrs = scanAttrNeed != null && (
       !tagIsStart ||
         (treeSim.currentNs == Ns.Html && {
-          // unhashable names (custom elements: <emu-*> etc.) memoize on
-          // their FNV-64 — already computed above — so attr-need is one
-          // compare per tag on custom-element-dense documents too
-          // (MatchingVm keys its open-name counts the same way, but only
-          // as a necessary condition: its frames compare names exactly).
-          // Bit 63 biases the FNV key space AWAY from packed TagHash
-          // values, but the separation is probabilistic, not structural:
-          // TagHash.update guards (h >>> 59) == 0 BEFORE the 5-bit shift
-          // (reference parity, tag.rs), so a 13-char dashless name whose
-          // first letter is c..j packs with bit 63 set. A cross-space
-          // collision therefore needs full 64-bit equality — the same
-          // (negligible) trust level as the FNV keys themselves
-          val key = if (tNameHash != TagHash.Empty) tNameHash
-                    else tNameFnv | Long.MinValue
-          val m = ((key * 0x9e3779b97f4a7c15L) >>> 56).toInt
-          if (memoNeedHash(m) == key) memoNeedSkip(m)
+          val m = LongIndex.hash(tNameKey) & 0xff
+          if (memoNeedKey(m) == tNameKey) memoNeedSkip(m)
           else {
-            val skip = !scanAttrNeed.needsAttrs(tNameHash, tNameStart, tNameEnd, input)
-            memoNeedHash(m) = key; memoNeedSkip(m) = skip
+            val skip = !scanAttrNeed.needsAttrs(tNameKey)
+            memoNeedKey(m) = tNameKey; memoNeedSkip(m) = skip
             skip
           }
         }))
@@ -1103,53 +1064,31 @@ object Lexer {
   * tag inside the lexer's hottest dispatch, and a monomorphic call the
   * JIT can inline measurably beats an interface call there.
   *
-  * `keys` is an open-addressed power-of-two table of 5-bit-packed name
-  * hashes (0 = empty slot); `names` lists lowercase unhashable selector
-  * names (almost always empty — standard HTML tag names all hash).
+  * Every selector type name is keyed by its [[NameKey]], so names the
+  * hash can't encode (custom elements, non-ASCII names) take the same
+  * probe as the rest. A key collision only records attributes a tag did
+  * not need. `hashes` and `names` are kept for the dump alone: FNV keys
+  * cannot be decoded back to names.
   */
-final class AttrNeedTable(val allTags: Boolean, keys: Array[Long],
-                          names: Array[String]) {
+final class AttrNeedTable private (val allTags: Boolean, keys: LongIndex,
+                                   hashes: Seq[Long], names: Seq[String]) {
   /** Debug views for the selectors_ast-style dump (graft.DumpAst). */
-  private[graft] def dumpHashes: Seq[Long] = keys.filter(_ != 0L).toSeq
-  private[graft] def dumpNames: Seq[String] = names.toSeq
+  private[graft] def dumpHashes: Seq[Long] = hashes.distinct
+  private[graft] def dumpNames: Seq[String] = names
 
-  def needsAttrs(nameHash: Long, s: Int, e: Int, input: Array[Byte]): Boolean = {
-    if (allTags) return true
-    if (nameHash != TagHash.Empty) {
-      if (keys.length == 0) return false
-      val mask = keys.length - 1
-      var i = java.lang.Long.hashCode(nameHash * 0x9e3779b97f4a7c15L) & mask
-      while (true) {
-        val k = keys(i)
-        if (k == nameHash) return true
-        if (k == 0L) return false
-        i = (i + 1) & mask
-      }
-      false // unreachable
-    } else {
-      var i = 0
-      while (i < names.length) {
-        if (HtmlUtil.eqIgnoreCase(input, s, e, names(i))) return true
-        i += 1
-      }
-      false
-    }
-  }
+  def needsAttrs(nameKey: Long): Boolean = allTags || keys.get(nameKey) >= 0
 }
 
 object AttrNeedTable {
-  /** Build from explicit hash / name lists (allTags forces every tag). */
+  /** Build from the selector type names: 5-bit hashes of the names the
+    * hash encodes, lowercase strings of the rest (allTags forces every
+    * tag).
+    */
   def apply(allTags: Boolean, hashes: Seq[Long], names: Seq[String]): AttrNeedTable = {
-    var cap = 16
-    while (cap < hashes.length * 3) cap *= 2
-    val keys = new Array[Long](cap)
-    for (h <- hashes) {
-      val mask = keys.length - 1
-      var i = java.lang.Long.hashCode(h * 0x9e3779b97f4a7c15L) & mask
-      while (keys(i) != 0L && keys(i) != h) i = (i + 1) & mask
-      keys(i) = h
-    }
-    new AttrNeedTable(allTags, keys, names.toArray)
+    val keys = new LongIndex
+    hashes.foreach(keys.getOrAdd)
+    names.foreach(n => keys.getOrAdd(NameKey.of(n)))
+    new AttrNeedTable(allTags, keys, hashes, names)
   }
 
   /** Record attributes for no tag at all (test hook). */

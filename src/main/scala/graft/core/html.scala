@@ -59,10 +59,17 @@ object TagHash {
     else Empty
   }
 
+  /** Hash of a name given as a string; non-ASCII chars are unrepresentable
+    * (their low byte must not alias a letter: `š` is U+0161).
+    */
   def of(s: String): Long = {
     var h = 0L
     var i = 0
-    while (i < s.length) { h = update(h, s.charAt(i).toByte); i += 1 }
+    while (i < s.length) {
+      val c = s.charAt(i)
+      h = if (c < 0x80) update(h, c.toByte) else Empty
+      i += 1
+    }
     h
   }
 
@@ -161,6 +168,48 @@ object TagHash {
       h != 0
     }) ()
     sb.toString
+  }
+}
+
+/** The one tag-name key, the analog of the reference's `LocalName`
+  * (`src/html/local_name.rs:139-216`): the [[TagHash]] when
+  * the hash can encode the name, else the name's ASCII-case-folded
+  * FNV-1a with bit 63 set. Valid hashes are >= 6 and the FNV key is never
+  * 0, so 0 stays free as [[LongIndex]]'s empty slot.
+  *
+  * Equal names always give equal keys; the converse is not structural.
+  * Bit 63 biases FNV keys away from hashes, but a 13-char dashless name
+  * whose first letter is c..j packs with bit 63 set (`TagHash.update`
+  * checks `h >>> 59` before its shift, as the reference does), so keys
+  * are a necessary condition only: whoever must be exact confirms a hit
+  * by hash, or by a case-folded compare of the name bytes.
+  */
+object NameKey {
+  /** Key of the name `in(s until e)` whose [[TagHash]] is `hash`; only
+    * names the hash can't encode pay a pass over their bytes.
+    */
+  @inline def of(hash: Long, in: Array[Byte], s: Int, e: Int): Long =
+    if (hash != TagHash.Empty) hash else fnv(in, s, e) | Long.MinValue
+
+  /** Key of a lowercase selector name; a document tag spelled with the
+    * same UTF-8 bytes, in any ASCII case, gets the same key.
+    */
+  def of(name: String): Long = {
+    val b = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    of(TagHash.of(name), b, 0, b.length)
+  }
+
+  /** ASCII-case-folded FNV-1a of `in(s until e)`. */
+  private def fnv(in: Array[Byte], s: Int, e: Int): Long = {
+    var f = 0xcbf29ce484222325L
+    var i = s
+    while (i < e) {
+      val b = in(i)
+      val c = if (b >= 'A' && b <= 'Z') b + 32 else b & 0xff
+      f = (f ^ c) * 0x100000001b3L
+      i += 1
+    }
+    f
   }
 }
 

@@ -262,21 +262,6 @@ final class Extractor(policy: ExtractPolicy) {
 
     // merge text nodes and media in document order, splitting nodes that
     // contain a media offset (media first on offset ties)
-    if (keptMediaIdx.length == 0) {
-      // media-free fast path (most rows): direct array walk, no interleave
-      val ns = nodeStarts.raw
-      val ne = nodeEnds.raw
-      val n = nodeStarts.length
-      val dropWs = policy.dropWhitespaceOnlyNodes
-      var i = 0
-      while (i < n) {
-        val s = ns(i)
-        val e = ne(i)
-        if (!(dropWs && isAllWs(html, s, e))) raw.add(0, s, e, -1)
-        i += 1
-      }
-      return raw
-    }
     var ni = 0
     var ki = 0
     @inline def mediaOff(k: Int) = mediaOffsets(keptMediaIdx(k))

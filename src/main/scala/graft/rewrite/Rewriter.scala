@@ -828,9 +828,9 @@ final class Rewriter(
     private var matCount = -1
 
     def set(in0: Array[Byte], nameStart: Int, nameEnd: Int, hash: Long,
-            fnv: Long, ns: Int, attrs: AttrList): Unit = {
+            key: Long, ns: Int, attrs: AttrList): Unit = {
       in = in0; nameLowerV = null; nameStartV = nameStart; nameEndV = nameEnd
-      nameHashV = hash; nameFnvV = fnv; nsV = ns; attrsV = attrs
+      nameHashV = hash; nameKeyV = key; nsV = ns; attrsV = attrs
       matCount = if (attrs == null) 0 else attrs.count
       if (matCount > attrNamesLower.length) {
         attrNamesLower = new Array[String](matCount * 2)
@@ -846,10 +846,10 @@ final class Rewriter(
       }
     }
     // lazy: most tags never need the name STRING (hash compares suffice);
-    // interning probes a table and may allocate for unhashable names
+    // interning probes a table and allocates for a name not seen before
     def nameLower: String = {
       if (nameLowerV == null)
-        nameLowerV = internTagName(nameStartV, nameEndV, nameHashV)
+        nameLowerV = internTagName(nameStartV, nameEndV, nameKeyV)
       nameLowerV
     }
     def nameHash: Long = nameHashV
@@ -1012,104 +1012,38 @@ final class Rewriter(
     }
   }
 
-  // tag-name interning: hashable names decode from their own 5-bit hash
-  // (one allocation per distinct tag name per Rewriter lifetime); primitive
-  // open-addressed table — valid hashes are >= 6, so 0 is a free sentinel
-  private var nameKeys = new Array[Long](128)
+  // tag-name interning, one table keyed by the name key: one allocation
+  // per distinct name per Rewriter lifetime (without it every tag of a
+  // custom-element-dense document allocated two strings). A hit is
+  // confirmed by an exact compare, as VM frames do.
+  private val nameIds = new graft.core.LongIndex(128)
   private var nameVals = new Array[String](128)
-  private var nameCount = 0
-  private def internTagName(nameStart: Int, nameEnd: Int, hash: Long): String = {
-    if (hash != TagHash.Empty) {
-      val mask = nameKeys.length - 1
-      var i = (java.lang.Long.hashCode(hash * 0x9e3779b97f4a7c15L) & mask)
-      while (true) {
-        val k = nameKeys(i)
-        if (k == hash) return nameVals(i)
-        if (k == 0L) {
-          val s = TagHash.toName(hash)
-          nameKeys(i) = hash; nameVals(i) = s
-          nameCount += 1
-          if (nameCount * 2 > nameKeys.length) growNameCache()
-          return s
-        }
-        i = (i + 1) & mask
-      }
-      null // unreachable
-    } else internUnhashable(nameStart, nameEnd)
+  private def internTagName(nameStart: Int, nameEnd: Int, key: Long): String = {
+    val id = nameIds.getOrAdd(key)
+    if (id == nameVals.length) nameVals = java.util.Arrays.copyOf(nameVals, id * 2)
+    val v = nameVals(id)
+    if (v == null) {
+      val s = decodeLower(nameStart, nameEnd)
+      nameVals(id) = s
+      s
+    } else if (eqLowerAscii(v, nameStart, nameEnd)) v
+    else decodeLower(nameStart, nameEnd) // key collision or non-ASCII name
   }
-
-  // unhashable names (>12 chars or chars outside [a-z0-9-], e.g. custom
-  // elements like <emu-production>) intern by a case-folded FNV over the
-  // input bytes — without this every such tag occurrence allocates two
-  // strings (documents full of custom elements pay it on EVERY tag)
-  private var uKeys = new Array[Long](64)
-  private var uVals = new Array[String](64)
-  private var uCount = 0
-  private def internUnhashable(s: Int, e: Int): String = {
-    // the lexer computed the case-folded FNV while scanning the name —
-    // valid here because interning only happens inside sink callbacks
-    if (!lexer.tagNameIsAscii) // rare; byte-vs-char compare below would never match
-      return HtmlUtil.lowerAscii(new String(input, s, e - s,
-        java.nio.charset.StandardCharsets.UTF_8))
-    var h = lexer.tagNameFnv
-    if (h == 0L) h = 1L
-    val mask = uKeys.length - 1
-    var j = java.lang.Long.hashCode(h * 0x9e3779b97f4a7c15L) & mask
-    while (true) {
-      val k = uKeys(j)
-      if (k == h && eqLowerAscii(uVals(j), s, e)) return uVals(j)
-      if (k == 0L) {
-        val str = HtmlUtil.lowerAscii(new String(input, s, e - s,
-          java.nio.charset.StandardCharsets.UTF_8))
-        uKeys(j) = h; uVals(j) = str
-        uCount += 1
-        if (uCount * 2 > uKeys.length) growUnhashableCache()
-        return str
-      }
-      j = (j + 1) & mask
-    }
-    null // unreachable
-  }
+  private def decodeLower(s: Int, e: Int): String =
+    HtmlUtil.lowerAscii(new String(input, s, e - s, java.nio.charset.StandardCharsets.UTF_8))
+  /** Exact case-folded compare of an interned name with `input(s until e)`;
+    * a non-ASCII byte never confirms (a UTF-8 sequence is not one char).
+    */
   private def eqLowerAscii(v: String, s: Int, e: Int): Boolean = {
     if (v.length != e - s) return false
     var i = 0
     while (i < v.length) {
       val b = input(s + i) & 0xff
       val c = if (b >= 'A' && b <= 'Z') b + 32 else b
-      if (v.charAt(i) != c.toChar) return false
+      if (b >= 0x80 || v.charAt(i) != c.toChar) return false
       i += 1
     }
     true
-  }
-  private def growUnhashableCache(): Unit = {
-    val ok = uKeys; val ov = uVals
-    uKeys = new Array[Long](ok.length * 2)
-    uVals = new Array[String](ov.length * 2)
-    val mask = uKeys.length - 1
-    var j = 0
-    while (j < ok.length) {
-      if (ok(j) != 0L) {
-        var i = (java.lang.Long.hashCode(ok(j) * 0x9e3779b97f4a7c15L) & mask)
-        while (uKeys(i) != 0L) i = (i + 1) & mask
-        uKeys(i) = ok(j); uVals(i) = ov(j)
-      }
-      j += 1
-    }
-  }
-  private def growNameCache(): Unit = {
-    val ok = nameKeys; val ov = nameVals
-    nameKeys = new Array[Long](ok.length * 2)
-    nameVals = new Array[String](ov.length * 2)
-    val mask = nameKeys.length - 1
-    var j = 0
-    while (j < ok.length) {
-      if (ok(j) != 0L) {
-        var i = (java.lang.Long.hashCode(ok(j) * 0x9e3779b97f4a7c15L) & mask)
-        while (nameKeys(i) != 0L) i = (i + 1) & mask
-        nameKeys(i) = ok(j); nameVals(i) = ov(j)
-      }
-      j += 1
-    }
   }
 
   // ---- serializer helpers ----
@@ -1188,7 +1122,7 @@ final class Rewriter(
         throw new MemoryLimitExceededError(maxDocBytes, out.size)
       flushPendingText(rawStart)
 
-      view.set(input, nameStart, nameEnd, nameHash, lexer.tagNameFnv, ns, attrs)
+      view.set(input, nameStart, nameEnd, nameHash, lexer.tagNameKey, ns, attrs)
 
       matchedIdsBuf.clear()
       lastMatchWithContent = false
@@ -1257,7 +1191,7 @@ final class Rewriter(
       // no string on this path at all: the VM matches frames by hash, or
       // by byte-slice compare for unhashable names; only an actual
       // EndTag token (rare) interns on demand below
-      vm.execEndTag(input, nameStart, nameEnd, nameHash, lexer.tagNameFnv, popSink)
+      vm.execEndTag(input, nameStart, nameEnd, nameHash, lexer.tagNameKey, popSink)
 
       var forced = false
       if (!emissionEnabled && matchedRemoved == 0) {
@@ -1269,7 +1203,7 @@ final class Rewriter(
       }
 
       if (endTagHandlers.hasActive || forced) {
-        val tok = new EndTagTok(internTagName(nameStart, nameEnd, nameHash), rawStart, rawEnd)
+        val tok = new EndTagTok(internTagName(nameStart, nameEnd, lexer.tagNameKey), rawStart, rawEnd)
         endTagHandlers.doForEachActiveAndRemoveTail(h => h(tok))
         if (tok.renamedTo != null && !tok.mutations.removed)
           tok.mutations.replace(s"</${tok.renamedTo}>", ContentType.Html)

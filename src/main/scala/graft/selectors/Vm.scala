@@ -1,6 +1,6 @@
 package graft.selectors
 
-import graft.core.TagHash
+import graft.core.{LongIndex, TagHash}
 import scala.collection.mutable
 
 /** Per-element payload attached to open-stack frames; the analog of the
@@ -24,11 +24,11 @@ object ElementDescriptor {
 trait VmElemView extends ElemView {
   var nthIdx: Int = 0
   var nthOfTypeIdx: Int = 0
-  /** Case-folded FNV identity of the tag name bytes (the lexer computes
-    * it while scanning) — keys the open-name counts for names the 5-bit
-    * hash can't encode, without string materialization.
+  /** [[graft.core.NameKey]] of the tag name (the lexer computes it while
+    * scanning): keys the entry buckets and open-name counts for every
+    * name, hashable or not, without string materialization.
     */
-  var nameFnvV: Long = 0L
+  var nameKeyV: Long = 0L
   /** Tag-name byte range in [[nameInput]]: stack frames keep positions
     * instead of interned strings, so unhashable names (custom elements)
     * never materialize on push/pop.
@@ -39,7 +39,7 @@ trait VmElemView extends ElemView {
   def nameInput: Array[Byte]
   final def nthIndex: Int = nthIdx
   final def nthOfTypeIndex: Int = nthOfTypeIdx
-  final def nameFnv: Long = nameFnvV
+  final def nameKey: Long = nameKeyV
 }
 
 /** Match callback for [[MatchingVm.execStartTag]]. A dedicated trait
@@ -90,13 +90,12 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
   // one heap object per popped element.
   // Unhashable names keep their byte range into the current document
   // buffer (valid for the whole parse) — no string is ever interned on
-  // the push/pop path. fCntSlot caches the frame's open-name-count slot
-  // so popping decrements without re-probing; oncGrow re-points live
-  // slots.
+  // the push/pop path. fCntId caches the frame's open-name id, stable
+  // while the count table grows, so popping decrements without a probe.
   private var fNameStart = new Array[Int](64)
   private var fNameEnd = new Array[Int](64)
   private var fNameHash = new Array[Long](64)
-  private var fCntSlot = new Array[Int](64)
+  private var fCntId = new Array[Int](64)
   private var fChildCount = new Array[Int](64)
   private var fJumps = new Array[Array[Int]](64)
   private var fHereditary = new Array[Array[Int]](64)
@@ -109,66 +108,27 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
   // (hereditary-jump array, depth-of-owner) with reference dedup
   private val activeHereditary = new mutable.ArrayBuffer[(Array[Int], Int)](16)
 
-  // open-name counts (primitive open addressing) keyed by [[nameKey]];
-  // no key is 0, the empty sentinel. A count is a necessary condition
-  // only: a key collision costs one wasted O(depth) scan, since frames
-  // compare names exactly.
-  private var oncKeys = new Array[Long](128)
-  private var oncCounts = new Array[Int](128)
-  private var oncSize = 0
-
-  /** The tag-name hash (valid hashes are >= 6), or the case-folded FNV
-    * with bit 63 set for names the hash can't encode — the lexer's
-    * attr-need memo key.
-    */
-  @inline private def nameKey(hash: Long, fnv: Long): Long =
-    if (hash != TagHash.Empty) hash else fnv | Long.MinValue
-
-  @inline private def oncSlot(key: Long): Int = {
-    val mask = oncKeys.length - 1
-    var i = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
-    while (oncKeys(i) != 0L && oncKeys(i) != key) i = (i + 1) & mask
-    i
-  }
+  // open-name counts, indexed by the name's id in `oncIds`. A count is a
+  // necessary condition only: a key collision costs one wasted O(depth)
+  // scan, since frames compare names exactly.
+  private val oncIds = new LongIndex(64)
+  private var oncCounts = new Array[Int](64)
   // one-entry memo: repeated pushes of the same name (list items, table
-  // cells) reuse the slot without re-probing; grow/reset invalidate
+  // cells) skip the probe; ids survive growth, so only reset drops it
+  // (id -1 makes a view that never set its key fail loudly)
   private var lastOncKey = 0L
-  private var lastOncSlot = 0
+  private var lastOncId = -1
 
-  /** Increment and return the key's slot (stable until the next grow). */
+  /** Increment the key's count and return its id. */
   private def oncInc(key: Long): Int = {
-    if (key == lastOncKey) { val i = lastOncSlot; oncCounts(i) += 1; return i }
-    var i = oncSlot(key)
-    if (oncKeys(i) == 0L) {
-      oncKeys(i) = key
-      oncSize += 1
-      if (oncSize * 3 > oncKeys.length) { oncGrow(); i = oncSlot(key) }
+    val id = if (key == lastOncKey) lastOncId else {
+      val i = oncIds.getOrAdd(key)
+      if (i == oncCounts.length) oncCounts = java.util.Arrays.copyOf(oncCounts, i * 2)
+      lastOncKey = key; lastOncId = i
+      i
     }
-    oncCounts(i) += 1
-    lastOncKey = key; lastOncSlot = i
-    i
-  }
-  private def oncGrow(): Unit = {
-    val ok = oncKeys; val oc = oncCounts
-    oncKeys = new Array[Long](ok.length * 2)
-    oncCounts = new Array[Int](oc.length * 2)
-    val moved = new Array[Int](ok.length)
-    var j = 0
-    while (j < ok.length) {
-      if (ok(j) != 0L) {
-        val i = oncSlot(ok(j))
-        oncKeys(i) = ok(j); oncCounts(i) = oc(j); moved(j) = i
-      }
-      j += 1
-    }
-    lastOncKey = 0L
-    // re-point live frames' cached slots at the rebuilt table
-    var f = 0
-    while (f <= top) { fCntSlot(f) = moved(fCntSlot(f)); f += 1 }
-  }
-  @inline private def oncGet(key: Long): Int = {
-    val i = oncSlot(key)
-    if (oncKeys(i) == key) oncCounts(i) else 0
+    oncCounts(id) += 1
+    id
   }
 
   /** ESI tags are void elements when enabled (reference
@@ -223,12 +183,9 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     rootChildCount = 0
     rootTypedCounters = null
     activeHereditary.clear()
-    if (oncSize > 0) {
-      java.util.Arrays.fill(oncKeys, 0L)
-      java.util.Arrays.fill(oncCounts, 0)
-      oncSize = 0
-    }
-    lastOncKey = 0L
+    java.util.Arrays.fill(oncCounts, 0, oncIds.size, 0)
+    oncIds.clear()
+    lastOncKey = 0L; lastOncId = -1
   }
 
   def depth: Int = top + 1
@@ -270,7 +227,7 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     val withContent = if (view.isHtmlNs) !isVoid else !selfClosing
 
     val u = nameEntry.universal
-    val b = nameEntry.bucketFor(view.nameHash, view)
+    val b = nameEntry.bucketFor(view.nameKey)
     val pj = if (top >= 0) fJumps(top) else noInts
     if (b == null && u.length == 0 && pj.length == 0 && activeHereditary.isEmpty) {
       // no candidate instruction (most tags under a name-only program)
@@ -314,7 +271,7 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
   }
 
   private def pushFrame(view: VmElemView, jumps: Array[Int], hereditary: Array[Int]): Unit = {
-    val slot = oncInc(nameKey(view.nameHash, view.nameFnv))
+    val cntId = oncInc(view.nameKey)
     top += 1
     if (top == fNameHash.length) growFrames()
     fNameHash(top) = view.nameHash
@@ -322,7 +279,7 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     // never intern a string here
     fNameStart(top) = view.nameStartV
     fNameEnd(top) = view.nameEndV
-    fCntSlot(top) = slot
+    fCntId(top) = cntId
     fJumps(top) = jumps
     fHereditary(top) = hereditary
     fDesc(top) = null
@@ -345,7 +302,7 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     fNameStart = java.util.Arrays.copyOf(fNameStart, n)
     fNameEnd = java.util.Arrays.copyOf(fNameEnd, n)
     fNameHash = java.util.Arrays.copyOf(fNameHash, n)
-    fCntSlot = java.util.Arrays.copyOf(fCntSlot, n)
+    fCntId = java.util.Arrays.copyOf(fCntId, n)
     fChildCount = java.util.Arrays.copyOf(fChildCount, n)
     fJumps = java.util.Arrays.copyOf(fJumps, n)
     fHereditary = java.util.Arrays.copyOf(fHereditary, n)
@@ -380,17 +337,18 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     * case-folded slice compare within the same buffer.
     */
   def execEndTag(input: Array[Byte], nameStart: Int, nameEnd: Int,
-                 nameHash: Long, nameFnv: Long, sink: PopSink): Unit = {
+                 nameHash: Long, nameKey: Long, sink: PopSink): Unit = {
     @inline def matches(j: Int): Boolean =
       fNameHash(j) == nameHash && (nameHash != TagHash.Empty ||
         eqSliceIgnoreCase(input, fNameStart(j), fNameEnd(j), nameStart, nameEnd))
 
     var idx = top
     // fast path: well-formed content closes the innermost element — no
-    // open-count probe needed (the cached slot decrements directly)
+    // open-count probe needed (the cached id decrements directly)
     if (top < 0 || !matches(top)) {
       // stray end tag O(1) reject via open-name counts
-      if (oncGet(nameKey(nameHash, nameFnv)) == 0) return
+      val id = oncIds.get(nameKey)
+      if (id < 0 || oncCounts(id) == 0) return
       while (idx >= 0 && !matches(idx)) idx -= 1
       if (idx < 0) return
     }
@@ -405,7 +363,7 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
     // first): a cache-linear walk over the parallel arrays
     var j = idx
     while (j <= top) {
-      oncCounts(fCntSlot(j)) -= 1
+      oncCounts(fCntId(j)) -= 1
       val d = fDesc(j)
       if (d != null) { sink.onPop(d); fDesc(j) = null }
       j += 1
@@ -415,76 +373,44 @@ final class MatchingVm(program: Program, enableEsiTags: Boolean = false) {
 }
 
 /** Entry dispatch for [[MatchingVm]]: entry instructions are bucketed by
-  * the name of their TypeSel anchor — a TypeSel is a necessary
-  * condition, so a tag can only match entries in its own name bucket plus
-  * the anchor-less `universal` entries (universal, bare .class/#id/[attr]).
-  * One open-addressed probe replaces the full entry-point sweep per tag;
-  * names the tag hash can't encode go through the `byName` map.
+  * the [[graft.core.NameKey]] of their TypeSel anchor — a TypeSel is a
+  * necessary condition, so a tag can only match entries in its own name
+  * bucket plus the anchor-less `universal` entries (universal, bare
+  * .class/#id/[attr]). One probe replaces the full entry-point sweep per
+  * tag, for hashable and unhashable names alike. `Instr.eval` still
+  * checks the TypeSel exactly, so a key collision costs one wasted eval,
+  * never a wrong match.
   */
-final class NameEntryIndex private (keys: Array[Long], buckets: Array[Array[Int]],
-                                    byName: java.util.HashMap[String, Array[Int]],
-                                    val universal: Array[Int]) {
-  private val byNameEmpty = byName.isEmpty
-  // single-anchor specialization (e.g. the div/.note/[href] mix has one
-  // name bucket): one register compare per tag instead of a table probe
-  private var soloKey = 0L
-  private var soloBucket: Array[Int] = null
-  if (byNameEmpty) {
-    var i = 0
-    var n = 0
-    var ki = -1
-    while (i < keys.length) { if (keys(i) != 0L) { n += 1; ki = i }; i += 1 }
-    if (n == 1) { soloKey = keys(ki); soloBucket = buckets(ki) }
-  }
+final class NameEntryIndex private (ids: LongIndex, buckets: Array[Array[Int]],
+                                    soloKey: Long, val universal: Array[Int]) {
+  // single-anchor specialization (soloKey != 0; e.g. the div/.note/[href]
+  // mix has one name bucket): one register compare per tag, no probe
+  private val soloBucket: Array[Int] = if (soloKey != 0L) buckets(0) else null
 
-  /** Entries whose anchor matches this tag name, or null. The name string
-    * is only fetched for unhashable tags, and only when some entry is
-    * anchored on an unhashable name.
-    */
-  def bucketFor(hash: Long, view: ElemView): Array[Int] = {
-    if (soloKey != 0L) {
-      if (hash == soloKey) soloBucket else null
-    } else if (hash != graft.core.TagHash.Empty) {
-      val mask = keys.length - 1
-      var i = java.lang.Long.hashCode(hash * 0x9e3779b97f4a7c15L) & mask
-      while (true) {
-        val k = keys(i)
-        if (k == hash) return buckets(i)
-        if (k == 0L) return null
-        i = (i + 1) & mask
-      }
-      null // unreachable
-    } else if (byNameEmpty) null
-    else byName.get(view.nameLower)
-  }
+  /** Entries whose anchor has this name key, or null. */
+  def bucketFor(key: Long): Array[Int] =
+    if (soloKey != 0L) { if (key == soloKey) soloBucket else null }
+    else { val id = ids.get(key); if (id < 0) null else buckets(id) }
 }
 
 object NameEntryIndex {
   def build(program: Program): NameEntryIndex = {
-    val byHash = mutable.LinkedHashMap[Long, mutable.ArrayBuffer[Int]]()
-    val byNameB = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Int]]()
+    val ids = new LongIndex
+    var firstKey = 0L
+    val byId = mutable.ArrayBuffer[mutable.ArrayBuffer[Int]]()
     val universal = mutable.ArrayBuffer[Int]()
     for (idx <- program.entryPoints) {
       program.instrs(idx).simples.collectFirst { case t: TypeSel => t } match {
-        case Some(TypeSel(lower, hash)) =>
-          if (hash != graft.core.TagHash.Empty)
-            byHash.getOrElseUpdate(hash, new mutable.ArrayBuffer[Int]) += idx
-          else byNameB.getOrElseUpdate(lower, new mutable.ArrayBuffer[Int]) += idx
+        case Some(TypeSel(lower, _)) =>
+          val key = graft.core.NameKey.of(lower)
+          val id = ids.getOrAdd(key)
+          if (id == 0) firstKey = key
+          if (id == byId.length) byId += new mutable.ArrayBuffer[Int]
+          byId(id) += idx
         case None => universal += idx
       }
     }
-    var cap = 16
-    while (cap < byHash.size * 3) cap *= 2
-    val keys = new Array[Long](cap)
-    val buckets = new Array[Array[Int]](cap)
-    val mask = cap - 1
-    for ((h, idxs) <- byHash) {
-      var i = java.lang.Long.hashCode(h * 0x9e3779b97f4a7c15L) & mask
-      while (keys(i) != 0L) i = (i + 1) & mask
-      keys(i) = h; buckets(i) = idxs.toArray
-    }
-    val byName = new java.util.HashMap[String, Array[Int]]()
-    for ((n, idxs) <- byNameB) byName.put(n, idxs.toArray)
-    new NameEntryIndex(keys, buckets, byName, universal.toArray)
+    new NameEntryIndex(ids, byId.map(_.toArray).toArray,
+      if (ids.size == 1) firstKey else 0L, universal.toArray)
   }
 }

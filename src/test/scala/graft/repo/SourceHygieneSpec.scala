@@ -13,6 +13,7 @@ import scala.jdk.CollectionConverters._
   * protocol cannot drift from it, and keeps library code from naming
   * functions in the caller's session outside the public `register`
   * methods (a Column builder wraps its native expression directly).
+  * It also keeps the engine on one Long-keyed table (`LongIndex`).
   * Paths resolve against
   * the working directory, which sbt sets to the project base directory
   * for forked tests.
@@ -92,6 +93,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:$i"
     if (hits.nonEmpty)
       fail(hits.mkString("createOrReplaceTempFunction outside a def register:\n", "\n", ""))
+  }
+
+  test("one Long-keyed open-addressed table in the engine: LongIndex") {
+    // its probe multiplier marks a hand-rolled table; DedupOps/SimOps use
+    // the same constant as a MinHash seed and live outside these packages
+    val hits = for {
+      pkg <- Seq("core", "selectors", "rewrite")
+      f <- scalaFiles(s"src/main/scala/graft/$pkg")
+      if f.getFileName.toString != "LongIndex.scala"
+      (line, i) <- read(f).linesIterator.zipWithIndex
+      if line.contains("0x9e3779b97f4a7c15L")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    if (hits.nonEmpty) fail(hits.mkString("probe multiplier outside LongIndex:\n", "\n", ""))
   }
 
   test("only *Spec.scala files under src/test/scala declare a main") {

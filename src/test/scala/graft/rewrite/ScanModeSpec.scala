@@ -161,6 +161,31 @@ class ScanModeSpec extends AnyFunSuite {
     assert(out3 == "<emu-xref-like-name>keep</emu-xref-like-name><emu-clause-like-name>ab</emu-clause-like-name>", out3)
   }
 
+  test("non-ASCII type selectors: scan mode keeps the matched tag's attributes") {
+    // the policy keys names by their UTF-8 bytes, as the lexer does; a
+    // UTF-16 compare of the selector name never matched `x-é`
+    def run(html: String, selectors: Seq[String], forceFull: Boolean): Seq[String] = {
+      val buf = new mutable.ArrayBuffer[String]()
+      val handlers = selectors.map(s => s -> ElementHandlers(element = el =>
+        buf += s"$s:${el.tagName}:${el.attr("id")}"))
+      val rw = new Rewriter(handlers, strict = false, produceOutput = false)
+      rw.disableAttrSkip = forceFull
+      rw.rewriteToBytes(html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      buf.toSeq
+    }
+    val cases = Seq(
+      "<p><x-é id=1>t</x-é></p>" -> Seq("x-é"),
+      "<p><x-é id=1>t</x-é><X-é id=2></X-é></p>" -> Seq("x-é[id]"),
+      "<div><café id=c>t</café><a id=a>l</a></div>" -> Seq("café", "š"))
+    for ((html, sels) <- cases) {
+      val full = run(html, sels, forceFull = true)
+      assert(run(html, sels, forceFull = false) == full, s"scan vs full on: $html")
+      assert(full.nonEmpty && full.forall(!_.endsWith(":null")), full)
+    }
+    // `š` (U+0161) must not alias `a` through its low byte
+    assert(run(cases(2)._1, Seq("š"), forceFull = true).isEmpty)
+  }
+
   test("scan mode skips attr recording for unmatched tags (spot check via bench doc)") {
     val in = getClass.getResourceAsStream("/benchdocs/cloudflare.com.html")
     assume(in != null)

@@ -131,7 +131,7 @@ class VmStackSpec extends AnyFunSuite {
     import graft.core.TagHash
     def viewOf(name: String, classes: String): VmElemView = new VmElemView {
       private val bytes = name.getBytes("UTF-8")
-      nameFnvV = 0L; nameStartV = 0; nameEndV = bytes.length
+      nameKeyV = TagHash.of(name); nameStartV = 0; nameEndV = bytes.length
       def nameInput: Array[Byte] = bytes
       def nameLower: String = name
       def nameHash: Long = TagHash.of(name)
@@ -155,6 +155,67 @@ class VmStackSpec extends AnyFunSuite {
     assert(idsOf("p", "note") == Seq(0))
     assert(idsOf("span", null) == Seq(1))
     assert(idsOf("p", null) == Seq())
+  }
+
+  test("60 live frames: open-name counts grow; out-of-order closes and stray end tags") {
+    // the real lexer feeds the VM: 60 distinct names, hashable (`haa`,
+    // `hac`, ...) alternating with unhashable (`x-elem-01`, ...) written
+    // in mixed case, so the count table grows while every frame is live;
+    // each frame carries a descriptor, so every pop is seen
+    import graft.core.{AttrList, LexemeSink, Lexer}
+    import graft.selectors._
+    val names = (0 until 60).map(k =>
+      if (k % 2 == 0) s"h${('a' + k / 26).toChar}${('a' + k % 26).toChar}" else f"x-elem-$k%02d")
+    val html = names.map(n => s"<${if (n.startsWith("x")) n.toUpperCase else n}>").mkString +
+      "</x-elem-41></x-elem-45></x-elem-99></hau></has></HAC></x-elem-01></haa></haa>"
+    val bytes = html.getBytes("UTF-8")
+    val vm = new MatchingVm(Program.compile(Seq((SelectorParser.parse("p"), 0))))
+    vm.reset()
+    val lexer = new Lexer(strict = false)
+    val events = new mutable.ArrayBuffer[String]()
+    def nameAt(s: Int, e: Int) = new String(bytes, s, e - s, "UTF-8").toLowerCase
+    final class View(s: Int, e: Int, h: Long, key: Long) extends VmElemView {
+      nameKeyV = key; nameStartV = s; nameEndV = e
+      def nameInput: Array[Byte] = bytes
+      def nameLower: String = nameAt(s, e)
+      def nameHash: Long = h
+      def isHtmlNs: Boolean = true
+      def attrCount: Int = 0
+      def attrNameLower(i: Int): String = null
+      def attrValue(i: Int): String = null
+    }
+    lexer.parse(bytes, new LexemeSink {
+      def onStartTag(s: Int, e: Int, h: Long, ns: Int, sc: Boolean, a: AttrList,
+                     rs: Int, re: Int): Unit =
+        if (vm.execStartTag(new View(s, e, h, lexer.tagNameKey), sc, (_: Int, _: Boolean) => ())) {
+          val d = new ElementDescriptor
+          d.endTagHandlerIdx = names.indexOf(nameAt(s, e))
+          vm.setCurrentDescriptor(d)
+        }
+      def onEndTag(s: Int, e: Int, h: Long, rs: Int, re: Int): Unit = {
+        events += s"end:${nameAt(s, e)}"
+        vm.execEndTag(bytes, s, e, h, lexer.tagNameKey,
+          (d: ElementDescriptor) => events += s"pop:${names(d.endTagHandlerIdx)}")
+      }
+      def onText(s: Int, e: Int, t: Int): Unit = ()
+      def onComment(ts: Int, te: Int, rs: Int, re: Int): Unit = ()
+      def onDoctype(a: Int, b: Int, c: Boolean, d: Int, e: Int, f: Boolean,
+                    g: Int, h: Int, i: Boolean, j: Boolean, k: Int, l: Int): Unit = ()
+      def onRawWithoutToken(rs: Int, re: Int): Unit = ()
+      def onEof(p: Int): Unit = ()
+    })
+    def pops(from: Int, to: Int) = (from to to).map(k => s"pop:${names(k)}")
+    assert(names.distinct.length == 60 && names(20) == "hau" && names(18) == "has")
+    assert(events.toSeq ==
+      Seq("end:x-elem-41") ++ pops(41, 59) ++
+      Seq("end:x-elem-45", "end:x-elem-99") ++ // already closed / never opened
+      Seq("end:hau") ++ pops(20, 40) ++
+      Seq("end:has") ++ pops(18, 19) ++ // below the innermost frame: by count
+      Seq("end:hac") ++ pops(2, 17) ++
+      Seq("end:x-elem-01") ++ pops(1, 1) ++
+      Seq("end:haa") ++ pops(0, 0) ++
+      Seq("end:haa")) // stray once the stack is empty
+    assert(vm.depth == 0)
   }
 
   test("comma list: Rewriter fires the handler once per element") {
